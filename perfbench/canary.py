@@ -52,3 +52,45 @@ class Canary:
     def scale(self) -> float:
         """Factor that maps this run's times onto the idle-host scale."""
         return REF_S / self.median()
+
+
+class QueryCanary:
+    """A canary shaped like ``feed_sync_query``'s queries: a GROUP BY and
+    a point lookup over a small fixed parquet table, through the Spark
+    DataFrame API only (no package code, and no ``SparkSession.sql``, so
+    the traced run opens no span for it). One sample takes ~0.2 s, cheap
+    enough to take after every round of measured queries, so its median
+    follows the host through the whole window rather than at its two
+    ends. On a host whose steal share moved between 0.5% and 23% across
+    five runs, the unscaled query p50 and p90 spread by 0.71 and 0.87
+    (quartile distance over median) and the scaled ones by 0.05 and 0.11.
+    The queries and the canary slow down alike when the host does; the
+    heavier set-up does not (see ``workloads.scaled``).
+    """
+
+    REF_S = 0.18  # about one sample on an idle, warmed-up 4-vCPU host
+
+    def __init__(self, spark, path) -> None:
+        from pyspark.sql import functions as F
+
+        self.F = F
+        (spark.range(4000)
+         .select(F.concat(F.lit("k"), (F.col("id") % 97).cast("string")).alias("k"),
+                 F.col("id").alias("v"))
+         .repartition(4).write.parquet(str(path)))
+        self.df = spark.read.parquet(str(path))
+        self.samples: list[float] = []
+
+    def sample(self) -> None:
+        F = self.F
+        t0 = time.perf_counter()
+        self.df.groupBy("k").agg(F.count("*"), F.sum("v")).collect()
+        self.df.where(F.col("v") == 17).collect()
+        self.samples.append(time.perf_counter() - t0)
+
+    def median(self) -> float:
+        return statistics.median(self.samples)
+
+    def scale(self) -> float:
+        """Factor that maps this window's times onto the idle-host scale."""
+        return self.REF_S / self.median()

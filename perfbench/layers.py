@@ -13,9 +13,9 @@ import statistics
 
 import accounting
 
-# end-to-end key -> what it means on each workload. Every time is
-# scaled by the host-speed canary (canary.py); the unscaled values are
-# printed as the run's notes.
+# end-to-end key -> what it means on each workload. Every time but
+# setup_s is scaled by a host-speed canary (canary.py); the unscaled
+# values are printed as the run's notes.
 E2E_MEANING = {
     "op_p50_s": {
         "webhook_freshness": "freshness_p50_s: envelope due time -> commit of the MERGE holding it",
@@ -33,7 +33,7 @@ E2E_MEANING = {
         "webhook_freshness": "table dir (buckets, _changes, staging, orphans) / live rows",
         "feed_sync_query": "table dir + replica + matview state / live rows",
     },
-    "setup_s": {"*": "set-up, timed once: the preload (+ matview and replica bootstrap)"},
+    "setup_s": {"*": "set-up, timed once, not scaled: the preload (+ matview and replica bootstrap)"},
 }
 
 # (name, unit, better, end-to-end metric(s) it should move)

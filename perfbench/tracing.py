@@ -13,7 +13,9 @@ puts the originals back. Each span:
 
 Spans stay in memory; ``write`` dumps them as JSON lines at the end.
 The tracer's own py4j calls and wall time are counted separately
-(``overhead_calls``/``overhead_s``) and kept out of the spans' counts.
+(``overhead_calls``/``overhead_s``) and kept out of the spans' counts;
+so are the py4j calls the benchmark makes inside ``unbilled()`` (its
+canary samples between a cycle's queries).
 """
 
 from __future__ import annotations
@@ -109,6 +111,7 @@ class Tracer:
         self.py4j = _Py4jCounter()
         self.overhead_calls = 0
         self.overhead_s = 0.0
+        self.unbilled_calls = 0  # made inside unbilled(): no span's
         # hooks run with the span just opened / closed: fn(span, args,
         # result) — the workloads attach outside-in counters here
         self.on_end: dict[str, list] = {}
@@ -172,14 +175,14 @@ class Tracer:
         for hook in self.on_start.get(name, ()):
             self._bookkeeping(lambda h=hook: h(span, args))
         span.attrs["_py4j0"] = self.py4j.calls
-        span.attrs["_oh0"] = self.overhead_calls
+        span.attrs["_oh0"] = self.overhead_calls + self.unbilled_calls
         span.start = self.clock()
         return span
 
     def close(self, span: Span, args=(), result=None) -> None:
         span.end = self.clock()
         span.py4j = (self.py4j.calls - span.attrs.pop("_py4j0")) - (
-            self.overhead_calls - span.attrs.pop("_oh0"))
+            self.overhead_calls + self.unbilled_calls - span.attrs.pop("_oh0"))
         self._stack.pop()
 
         def account():
@@ -204,6 +207,16 @@ class Tracer:
                 hook(span, args, result)
 
         self._bookkeeping(account)
+
+    @contextlib.contextmanager
+    def unbilled(self):
+        """Keep the block's py4j calls out of every open span (the
+        benchmark's own work inside an op, such as a canary sample)."""
+        c0 = self.py4j.calls
+        try:
+            yield
+        finally:
+            self.unbilled_calls += self.py4j.calls - c0
 
     @contextlib.contextmanager
     def op_span(self, name: str):
