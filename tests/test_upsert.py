@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from webhookdb_spark.operators.upsert import merge_upsert, upsert_envelopes
@@ -1107,6 +1108,61 @@ def test_zonemap_stats_exclude_sentinel_and_out_of_hint_rows(spark, tmp_warehous
     after = t.manifest.zonemaps
     assert after["0"]["v"] == [5, 5]
     assert after["1"] == before["1"]  # unlisted bucket stats untouched
+
+
+@pytest.mark.parametrize("zorder", [None, ("a", "v")])
+def test_zonemap_empty_bucket_list_and_empty_rewrites(
+        spark, tmp_warehouse, zorder):
+    """Zone-map refresh on degenerate rewrites: an empty ``buckets``
+    list commits without observing anything (observe() refuses zero
+    expressions) and leaves rows and stats alone; a rewrite that empties
+    its listed buckets — statically or only at run time — drops exactly
+    their stats. Holds with a zorder sort on the write too."""
+    from pyspark.sql import types as T
+
+    from webhookdb_spark.storage import PART_COL, bucket_expr
+
+    t = ManagedTable(spark, tmp_warehouse / "org" / f"zmempty{len(zorder or ())}")
+    schema = T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("a", T.LongType()),
+        T.StructField("v", T.LongType()),
+    ])
+    t.create(schema, key="k", n_buckets=4, zorder=zorder,
+             zonemap_cols=("v",))
+    t.overwrite_all(spark.createDataFrame(
+        [(f"k{i}", i, i * 10) for i in range(40)], schema))
+    zm0, n0 = dict(t.manifest.zonemaps), t.read().count()
+    assert sorted(zm0) == ["0", "1", "2", "3"]
+
+    txn = t.manifest.txn
+    t.overwrite_buckets(t.read().withColumn(PART_COL, bucket_expr("k", 4)), [])
+    assert t.manifest.txn == txn + 1
+    assert t.manifest.zonemaps == zm0 and t.read().count() == n0
+
+    # statically empty: the plan is an empty local relation
+    empty = spark.createDataFrame([], schema).withColumn(PART_COL, F.lit(1))
+    t.overwrite_buckets(empty, [1])
+    # empty only at run time: a filter no row passes
+    gone = t.read(buckets=[2]).where(F.col("v") < -1).withColumn(
+        PART_COL, bucket_expr("k", 4))
+    t.overwrite_buckets(gone, [2])
+    zm = t.manifest.zonemaps
+    assert sorted(zm) == ["0", "3"]
+    assert zm["0"] == zm0["0"] and zm["3"] == zm0["3"]
+    assert t.read(buckets=[1, 2]).count() == 0
+    assert t.read().count() == t.read(buckets=[0, 3]).count() > 0
+
+
+def test_bind_rejects_existing_column_without_assert(spark):
+    """bind() refuses to shadow an existing column with a ValueError —
+    an explicit check that ``python -O`` cannot strip."""
+    from webhookdb_spark.operators.util import bind
+
+    df = spark.range(2).withColumnRenamed("id", "x")
+    with pytest.raises(ValueError, match="already exists"):
+        bind(df, "x", F.col("x") + 1)
+    assert bind(df, "y", F.col("x") + 1).columns == ["x", "y"]
 
 
 def test_add_columns_aborts_if_commit_lands_before_rewrite(

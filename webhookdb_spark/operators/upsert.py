@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from webhookdb_spark.functions.converters import json_merge_udf
 from webhookdb_spark.spec import ReplicatorSpec
-from webhookdb_spark.storage import PART_COL, ManagedTable, bucket_expr
+from webhookdb_spark.storage import CHANGES_PART, PART_COL, ManagedTable, bucket_expr
 
 ACTION_COL = "_action"
 
@@ -211,6 +211,17 @@ def _obs_count_exprs() -> list[Column]:
     return _OBS_COUNT_EXPRS
 
 
+def _changes_fanout() -> Column:
+    """The new ``PART_COL`` of a change-capturing MERGE write: a kept
+    row stays in its bucket; an inserted or updated row is emitted
+    twice, into its bucket and into the reserved ``CHANGES_PART``."""
+    part = F.col(PART_COL)
+    return F.explode(
+        F.when(F.col(ACTION_COL) == "keep", F.array(part))
+        .otherwise(F.array(part, F.lit(CHANGES_PART)))
+    )
+
+
 @dataclass
 class MergeResult:
     inserted: int
@@ -261,13 +272,20 @@ def merge_upsert(
 ) -> MergeResult:
     """Merge a shaped batch into ``table`` under ``spec``'s semantics.
 
-    Single-pass plan: the merged result is written exactly once (action
-    counts ride along as ``Observation`` metrics on that same write), and
-    the change set is copied out of the just-written bucket files rather
-    than recomputed. No ``persist`` — the only lineage recomputation is a
-    column-pruned pass to discover affected buckets, which Catalyst
-    reduces to parsing the key alone. Batches landing in untouched
-    buckets (the initial-backfill case) skip the join entirely.
+    Single-pass plan: the merged result is written exactly once, and
+    that one write also produces the change set. Action counts ride it
+    as an ``Observation``; after the observation an ``explode``
+    duplicates every inserted/updated row into the reserved
+    ``CHANGES_PART`` partition, which ``overwrite_buckets`` stages with
+    the buckets and promotes to ``_changes/txn_<committed txn>`` right
+    after the manifest CAS. So the change set costs no extra job and no
+    re-read of the touched buckets, and it exists only for a committed
+    txn. The duplicates are counted before they are made, so the
+    counts stay per row. No ``persist`` — the only lineage
+    recomputation is a column-pruned pass to discover affected
+    buckets, which Catalyst reduces to parsing the key alone. Batches
+    landing in untouched buckets (the initial-backfill case) skip the
+    join entirely.
 
     ``buckets`` is the caller's routing hint: a bulk load that touches the
     whole keyspace should pass ``range(n_buckets)`` to skip the discovery
@@ -276,14 +294,14 @@ def merge_upsert(
     partition-key routing (partitionable_mixin.rb:49-54). Rows hashing
     outside the hint would be lost; the hint must be a superset.
 
-    ``capture_changes=False`` skips persisting the change set to the
-    per-transaction ``_changes`` dir (one whole extra write per MERGE):
-    ``MergeResult.changed`` is then a lazy filter over the just-written
-    bucket files, valid only until the NEXT transaction rewrites those
-    buckets. Use it for bulk loads with no fan-out/dependent consumers
-    (the reference skips ``_publish_rowupsert`` exactly when nothing
-    subscribes, base.rb:820-827); any pipeline that notifies dependents
-    or webhooks must keep the durable default.
+    ``capture_changes=False`` writes no change set: no row is
+    duplicated and no ``_changes`` dir is made. ``MergeResult.changed``
+    is then a lazy filter over the just-written bucket files, valid
+    only until the NEXT transaction rewrites those buckets. Use it for
+    bulk loads with no fan-out/dependent consumers (the reference skips
+    ``_publish_rowupsert`` exactly when nothing subscribes,
+    base.rb:820-827); any pipeline that notifies dependents or webhooks
+    must keep the durable default.
     """
     from pyspark.sql import Observation
 
@@ -310,9 +328,7 @@ def merge_upsert(
             .distinct()
             .collect()
         ]
-    changed_schema = table.spark.createDataFrame(
-        [], table.schema().add(ACTION_COL, "string")
-    ).schema
+    changed_schema = table.schema().add(ACTION_COL, "string")
     if not affected:  # empty batch: no txn churn
         empty = table.spark.createDataFrame([], changed_schema)
         return MergeResult(inserted=0, updated=0, noop=0, changed=empty)
@@ -321,33 +337,33 @@ def merge_upsert(
 
     obs = Observation()
     merged = merged.observe(obs, *_obs_count_exprs())
-    committed_txn, committed_buckets = table.overwrite_buckets(
-        merged, affected, extra_cols=[ACTION_COL])
-    counts = obs.get
-    # Change set (post-image of inserted/updated rows) goes to a
-    # per-transaction changes dir — never through the driver. It feeds
-    # dependent notification and webhook fan-out (base.rb:813-838) and is
-    # the CDC analog of Delta CDF. Derived from the bucket dirs THIS
-    # commit wrote (overwrite_buckets' return — re-reading
-    # table.manifest here could see a concurrent writer's later txn
-    # and mislabel/clobber its change set; r13 code review).
-    written = [str(table.path / committed_buckets[str(b)]) for b in affected]
-    changed = (
-        table.spark.read.schema(changed_schema)
-        .parquet(*written)
-        .where(F.col(ACTION_COL) != "keep")
-    )
     if capture_changes:
-        changes_path = str(table.path / "_changes" / f"txn_{committed_txn}")
-        changed.write.mode("overwrite").parquet(changes_path)
-        changed_df = table.spark.read.schema(changed_schema).parquet(changes_path)
+        merged = merged.withColumn(PART_COL, _changes_fanout())
+    committed_txn, committed_buckets = table.overwrite_buckets(
+        merged, affected, extra_cols=[ACTION_COL],
+        capture_changes=capture_changes)
+    counts = obs.get
+    # Change set (post-image of inserted/updated rows): feeds dependent
+    # notification and webhook fan-out (base.rb:813-838) and is the CDC
+    # analog of Delta CDF. Located by the txn and bucket dirs THIS
+    # commit wrote (overwrite_buckets' return — re-reading
+    # table.manifest here could see a concurrent writer's later txn;
+    # r13 code review).
+    if capture_changes:
+        changed = table.spark.read.schema(changed_schema).parquet(
+            str(table.path / "_changes" / f"txn_{committed_txn}"))
     else:
-        changed_df = changed
+        written = [str(table.path / committed_buckets[str(b)]) for b in affected]
+        changed = (
+            table.spark.read.schema(changed_schema)
+            .parquet(*written)
+            .where(F.col(ACTION_COL) != "keep")
+        )
     return MergeResult(
         inserted=counts.get("insert", 0),
         updated=counts.get("update", 0),
         noop=counts.get("keep", 0),
-        changed=changed_df,
+        changed=changed,
     )
 
 
@@ -563,7 +579,8 @@ def upsert_envelopes_with_contract(
     without the explicit release each batch would pin its blocks on
     executor storage until driver GC happens to collect the RDD.
     Safe because nothing downstream re-reads the batch lineage —
-    MergeResult.changed reads the just-written bucket files, and the
+    MergeResult.changed reads the committed change set (or, with
+    ``capture_changes=False``, the just-written bucket files), and the
     quarantine is already on disk.
     """
     from webhookdb_spark.operators.profile import expectation_reason
@@ -596,6 +613,11 @@ def upsert_envelopes_with_contract(
 # incremental pipeline needs: read exactly the post-images of txns
 # (since, end], compact to one row per key, trim delivered history.
 # ---------------------------------------------------------------------------
+
+# A change row's txn is the name of the txn dir holding its file, at any
+# depth below it; the table's own path cannot match, whatever it is named.
+_TXN_FROM_PATH = r"/_changes/txn_(\d+)/"
+
 
 def change_txns(table: ManagedTable) -> list[int]:
     """Transaction ids with a captured change set, ascending."""
@@ -638,14 +660,18 @@ def changes_since(
     # each row's _txn from its file path — the txn dir name IS the txn
     # id, so the rows are identical by construction (guide §6 listing /
     # §5 driver work).
+    # recursiveFileLookup: change files are read at any depth below
+    # their txn dir (partition discovery would skip or reject a nested
+    # layout), and each keeps the txn of the dir it sits under.
     paths = [str(table.path / "_changes" / f"txn_{t}") for t in txns]
     return (
         spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
         .parquet(*paths)
         .withColumn(
             "_txn",
             F.regexp_extract(
-                F.col("_metadata.file_path"), r"/txn_(\d+)/[^/]*$", 1
+                F.col("_metadata.file_path"), _TXN_FROM_PATH, 1
             ).cast("long"),
         )
     )
@@ -705,5 +731,5 @@ def stream_changes(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = reader.parquet(str(table.path / "_changes" / "txn_*"))
-    txn = F.regexp_extract(F.input_file_name(), r"txn_(\d+)", 1).cast("long")
+    txn = F.regexp_extract(F.input_file_name(), _TXN_FROM_PATH, 1).cast("long")
     return df.withColumn("_txn", txn)

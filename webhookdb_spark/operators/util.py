@@ -144,5 +144,6 @@ def bind(df: DataFrame, name: str, expr: Column) -> DataFrame:
     times per dedup composite. ``name`` must be fresh (select would
     reject a duplicate; withColumn would silently replace).
     """
-    assert name not in df.columns, f"bind: column {name!r} already exists"
+    if name in df.columns:
+        raise ValueError(f"bind: column {name!r} already exists")
     return df.withColumn(name, F.explode(F.array(expr)))

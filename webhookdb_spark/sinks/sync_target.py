@@ -502,15 +502,18 @@ class DatabaseSyncTarget:
         # a full window scan+aggregate per cycle just for these stats.
         from webhookdb_spark.operators.upsert import change_txns
 
+        # The window ends at the listed max: a txn committed after the
+        # listing is left whole for the next cycle, never synced under a
+        # watermark that does not cover it (and so delivered twice).
         txns = [t for t in change_txns(table) if t > last_txn]
-        window = changes_since(table, last_txn)
+        max_txn = max(txns, default=last_txn)
+        window = changes_since(table, last_txn, end_txn=max_txn)
         if not txns or window.isEmpty():
             # no captured txns (or only empty change sets): stats-only,
             # watermark unmoved — same as the old max(_txn) IS NULL arm
             st.setdefault("stats", []).append({"synced": 0, "at": now})
             self.state.save(st)
             return 0
-        max_txn = max(txns)
         from pyspark.sql import Observation
 
         obs = Observation()

@@ -69,7 +69,11 @@ commit               under ``buckets/`` is referenced until the manifest
                      flip, so a crash mid-write leaves garbage dirs but a
                      correct table (garbage is bounded by wtoken
                      uniqueness and removed by the next writer's abort
-                     path or GC).
+                     path or GC). A MERGE's change set is staged by the
+                     same write and promoted to ``_changes/txn_N`` only
+                     after the flip, so a loser or a crash before the
+                     flip leaves no change set. tests/
+                     test_change_capture.py (CAS loser).
 Retries are          A re-run of a failed MERGE re-plans from the current
 idempotent           manifest; committed effects are keyed by txn, so
                      replaying an uncommitted batch cannot double-apply.
@@ -94,6 +98,13 @@ from pyspark.sql import types as T
 from webhookdb_spark.functions.converters import CONV_STR2HASH
 
 PART_COL = "_part"
+# Reserved PART_COL values: staged like a bucket, never promoted into
+# buckets/. DISCARD_PART rows are dropped with the staging dir (they keep
+# a written plan non-empty so its Observations materialize);
+# CHANGES_PART rows become the committed txn's change set
+# (``overwrite_buckets(..., capture_changes=True)``).
+DISCARD_PART = -1
+CHANGES_PART = -2
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -505,13 +516,14 @@ class ManagedTable:
         self, df: DataFrame, buckets: list[int],
         extra_cols: list[str] | None = None,
         expected_txn: int | None = None,
+        capture_changes: bool = False,
     ) -> tuple[int, dict[str, str]]:
         """Swap in new data for the given buckets; df must carry PART_COL.
         Returns ``(committed_txn, {bucket_id: rel_dir})`` for the
         written buckets — callers needing the just-committed files
-        (e.g. the MERGE change-set derivation) must use this instead of
-        re-reading ``self.manifest``, which a concurrent writer may
-        have advanced past this commit in the meantime.
+        must use this instead of re-reading ``self.manifest``, which a
+        concurrent writer may have advanced past this commit in the
+        meantime.
 
         Writes the new bucket files under a fresh writer-unique version
         directory, then atomically replaces the manifest — readers of
@@ -536,6 +548,16 @@ class ManagedTable:
         txn at plan time, so a ``df`` derived from the caller's
         snapshot can never overwrite a commit that landed between the
         caller's manifest load and this call.
+
+        ``capture_changes=True`` turns the rows ``df`` routes to the
+        reserved ``CHANGES_PART`` partition into the change set of the
+        committed txn: that partition is staged by the same write as
+        the buckets, and right after the manifest CAS one ``os.replace``
+        promotes its dir to ``_changes/txn_<committed txn>`` (an empty
+        dir when no row was routed there, so every captured txn is
+        listed). A loser's staged change set goes with its staging dir,
+        so an aborted write leaves no ``_changes`` entry. Rows routed to
+        any other unlisted partition (``DISCARD_PART``) are dropped.
         """
         m = self.manifest
         if expected_txn is not None and m.txn != expected_txn:
@@ -548,20 +570,29 @@ class ManagedTable:
         staging = self.path / f"_staging_{txn}_{wtoken}"
         out = df.select(
             *[f.name for f in self.schema().fields], *(extra_cols or []), PART_COL
-        ).repartition(max(len(buckets), 1), F.col(PART_COL))
+        )
         # Zone-map refresh rides the staged write as an Observation
         # (guide §5: fuse driver actions): per listed bucket, a count
         # (so an empty bucket drops its stats, exactly like the old
         # staged-files re-read) and min/max per tracked column,
         # restricted by the same listed-bucket condition the old
         # `.where(PART_COL isin buckets)` enforced — stray partitions
-        # and delete_where's _part=-1 sentinel never leak into stats.
-        # This replaces a whole post-write read job per commit.
-        zm_cols = getattr(m, "zonemap_cols", None)
+        # and the reserved DISCARD_PART/CHANGES_PART rows never leak
+        # into stats.
+        # This replaces a whole post-write read job per commit. With no
+        # listed bucket there is nothing to observe (and observe() refuses
+        # zero expressions).
+        zm_cols = getattr(m, "zonemap_cols", None) if buckets else None
         zm_obs = None
         if zm_cols:
             from pyspark.sql import Observation
 
+            # A discarded sentinel row keeps the observed plan non-empty
+            # when every listed bucket is rewritten empty — the same
+            # guard as delete_where's: empty-relation propagation could
+            # otherwise drop the CollectMetrics node and zm_obs.get
+            # would fail.
+            out = out.unionByName(self._sentinel(out.schema, DISCARD_PART))
             zm_obs = Observation()
             zm_aggs = []
             for b in buckets:
@@ -574,6 +605,8 @@ class ManagedTable:
                     v = F.when(cond, F.col(c))
                     zm_aggs.append(F.min(v).alias(f"mn_{bb}_{c}"))
                     zm_aggs.append(F.max(v).alias(f"mx_{bb}_{c}"))
+        out = out.repartition(max(len(buckets), 1), F.col(PART_COL))
+        if zm_obs is not None:
             # observed BEFORE the optional zorder sort so the sort stays
             # the write's direct child (file-level Morton clustering
             # depends on that ordering reaching the writer)
@@ -704,12 +737,32 @@ class ManagedTable:
                 zonemaps=new_zonemaps if zm_cols else getattr(
                     m, "zonemaps", None),
             ).save(self.path)
+        if capture_changes:
+            src = staging / f"{PART_COL}={CHANGES_PART}"
+            dst = self.path / "_changes" / f"txn_{txn}"
+            dst.parent.mkdir(exist_ok=True)
+            # txn ids restart when a table is re-created in place, so an
+            # old change set may hold this name; the new one replaces it
+            shutil.rmtree(dst, ignore_errors=True)
+            if src.exists():
+                os.replace(src, dst)
+            else:  # nothing inserted or updated: empty change set
+                dst.mkdir()
         shutil.rmtree(staging, ignore_errors=True)
         for snap in dropped:  # GC dirs beyond the retention window
             for rel in snap["buckets"].values():
                 if rel not in referenced:
                     shutil.rmtree(self.path / rel, ignore_errors=True)
         return txn, {str(b): new_buckets[str(b)] for b in buckets}
+
+    def _sentinel(self, schema: T.StructType, part: int) -> DataFrame:
+        """One all-NULL row of ``schema`` routed to reserved partition
+        ``part``."""
+        return self.spark.range(1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name)
+              for f in schema.fields if f.name != PART_COL],
+            F.lit(part).alias(PART_COL),
+        )
 
     def overwrite_all(self, df: DataFrame,
                       expected_txn: int | None = None) -> None:
@@ -774,18 +827,14 @@ class ManagedTable:
         # empty-relation propagation replaces the map-stage subtree —
         # CollectMetrics included — with an empty LocalRelation, and the
         # observation never materializes (obs.get then dies in toPyRow
-        # on Row.empty). A sentinel row routed to pseudo-bucket -1 keeps
+        # on Row.empty). A sentinel row routed to DISCARD_PART keeps
         # the written plan non-empty; overwrite_buckets only promotes
         # dirs for the listed buckets, so the sentinel's staging dir is
         # discarded with the staging area.
-        fields = self.schema().fields
-        sentinel = self.spark.range(1).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields],
-            F.lit(-1).alias(PART_COL),
-        )
+        fields = self.schema()
         to_write = remaining.select(
             *[f.name for f in fields], PART_COL
-        ).unionByName(sentinel)
+        ).unionByName(self._sentinel(fields, DISCARD_PART))
         self.overwrite_buckets(to_write, affected)
         return int(obs.get["deleted"] or 0)
 

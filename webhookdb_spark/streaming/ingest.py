@@ -101,9 +101,11 @@ class IngestPipeline:
 
     # -- batch path --------------------------------------------------------
     def _write_audit(self, enveloped: DataFrame,
-                     audit_batch_id: int | None) -> None:
+                     audit_batch_id: int | None) -> list[str]:
         """Archive one batch into the audit table, partitioned
-        ``_batch=<id>/_day=<date>``.
+        ``_batch=<id>/_day=<date>``. Returns the distinct non-NULL
+        integration ids of the archived rows, observed on the write
+        itself, so routing the batch needs no scan of its own.
 
         With ``audit_batch_id`` (the foreachBatch batch id — stable
         across checkpointed re-execution) the write is mode-OVERWRITE
@@ -168,7 +170,11 @@ class IngestPipeline:
                         except OSError:
                             pass
             self._audit_migrated = True
-        audited = enveloped.withColumn("_day", F.to_date("received_at"))
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        audited = enveloped.withColumn("_day", F.to_date("received_at")).observe(
+            obs, F.collect_set("integration_opaque_id").alias("ids"))
         if audit_batch_id is None:
             (
                 audited.write.mode("append").partitionBy("_day")
@@ -185,6 +191,7 @@ class IngestPipeline:
                 .option("partitionOverwriteMode", "static")
                 .parquet(f"{self.audit_table_path}/_batch={int(audit_batch_id)}")
             )
+        return sorted(obs.get["ids"])
 
     def process_batch(self, envelopes: DataFrame, batch_id: int = 0,
                       skip_audit: bool = False,
@@ -194,7 +201,10 @@ class IngestPipeline:
         Routing: one pass over the micro-batch per *distinct integration
         present in it* (not per registered integration) — the batch is
         persisted once and filtered per target, so each integration's
-        shaping+merge reads from cache.
+        shaping+merge reads from cache. The integrations present come
+        from the audit write when there is one (an Observation on that
+        write); only an unaudited batch (replay, ``skip_audit``, no
+        audit path) pays a distinct-collect job for them.
         """
         # Replayed envelopes carry a marker so they are not re-logged
         # (LoggedWebhook::RETRY_HEADER parity, logged_webhook.rb:44-45) —
@@ -203,14 +213,17 @@ class IngestPipeline:
         if is_replay:
             envelopes = envelopes.drop("_replay")
         envelopes = envelopes.persist()
+        present = None
         try:
             if self.audit_table_path and not is_replay and not skip_audit:
                 # Audit log (logged_webhooks analog, api/helpers.rb:227-230):
                 # partitioned by arrival date for the trim jobs. This
                 # runs BEFORE any delivery dedup: the reference logs
                 # every delivery at intake (api/helpers.rb:271), retries
-                # included, so replay/forensics never lose rows.
-                self._write_audit(envelopes, audit_batch_id)
+                # included, so replay/forensics never lose rows. Dedup
+                # below keeps one row of every integration, so the
+                # archived ids are the routed ids.
+                present = self._write_audit(envelopes, audit_batch_id)
             if self.dedup_deliveries:
                 deduped = (
                     envelopes.withColumn(
@@ -223,10 +236,12 @@ class IngestPipeline:
                 )
                 envelopes.unpersist()
                 envelopes = deduped
-            present = [
-                r[0]
-                for r in envelopes.select("integration_opaque_id").distinct().collect()
-            ]
+            if present is None:
+                present = [
+                    r[0]
+                    for r in envelopes.select("integration_opaque_id")
+                    .distinct().collect()
+                ]
 
             def run_one(opaque_id: str) -> None:
                 rt = self.integrations.get(opaque_id)
