@@ -38,7 +38,7 @@ from webhookdb_spark.operators import history as H  # noqa: E402
 from webhookdb_spark.operators import skew as SKW  # noqa: E402
 from webhookdb_spark.operators import digest as DG  # noqa: E402
 from webhookdb_spark.operators import text as X  # noqa: E402
-from webhookdb_spark.operators.util import scale_out  # noqa: E402
+from webhookdb_spark.operators.util import memo_col, scale_out  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -2792,18 +2792,15 @@ def q_scd2_incremental(spark: SparkSession, sf: str) -> DataFrame:
     return hist
 
 
-_ENV_COLS_MEMO: dict = {}
-
-
 def _event_env_cols(value_cents: bool = False) -> list:
     """The events→envelope projection the ingest composites build per
     arrival window: (opaque_id, body, received_at, _seq) with the JSON
     body carrying (user_id, event_type, ts_us[, value_cents]). A pure
     constant tree (~30 py4j round-trips to build) shared by four
-    composite queries × N windows each — memoized once per process
+    composite queries × N windows each — memoized (see memo_col)
     (guide §5 driver work)."""
-    cols = _ENV_COLS_MEMO.get(value_cents)
-    if cols is None:
+
+    def build() -> list:
         fields = [
             "user_id",
             "event_type",
@@ -2815,13 +2812,14 @@ def _event_env_cols(value_cents: bool = False) -> list:
             fields.append(
                 F.floor(F.col("value") * 100).cast("long").alias("value_cents")
             )
-        cols = _ENV_COLS_MEMO[value_cents] = [
+        return [
             F.col("event_id").cast("string").alias("opaque_id"),
             F.to_json(F.struct(*fields)).alias("body"),
             F.col("ts").alias("received_at"),
             F.col("event_id").alias("_seq"),
         ]
-    return cols
+
+    return memo_col(("event_env_cols", value_cents), build)
 
 
 def q_scd2_feed_maintained(spark: SparkSession, sf: str) -> DataFrame:

@@ -837,3 +837,154 @@ print("PLAN_CACHE_OK")
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, timeout=240)
     assert "PLAN_CACHE_OK" in out.stdout, out.stdout + out.stderr
+
+
+def _analyzed_modulo_ids(df) -> str:
+    """The analyzed plan with expression ids and pyspark's lambda
+    variable numbering (``x_12`` → ``x``) erased."""
+    p = df._jdf.queryExecution().analyzed().toString()
+    p = re.sub(r"#\d+L?", "#", p)
+    return re.sub(r"(lambda \w+?)_\d+#", r"\1#", p)
+
+
+def _fake_env(spark, rows):
+    import json as _json
+
+    return spark.createDataFrame(
+        [("fake_v1", _json.dumps(r), None) for r in rows],
+        "opaque_id string, body string, received_at timestamp",
+    )
+
+
+def _memo_family_df(family, spark, tmp_path):
+    """One representative DataFrame per memoized-tree family, built
+    through the public operator that owns the memo key."""
+    from pyspark.sql import functions as F
+
+    from webhookdb_spark.operators import digest as DG
+    from webhookdb_spark.operators import history as H
+    from webhookdb_spark.operators import similarity as S
+    from webhookdb_spark.operators.dedup import minhash_signatures
+    from webhookdb_spark.operators.profile import expectation_reason
+    from webhookdb_spark.operators.upsert import build_merge, dedupe_last_wins
+    from webhookdb_spark.replicators.fake import FAKE_V1
+
+    rows = [{"my_id": f"k{i}", "at": f"2024-01-0{i + 1}T00:00:00Z", "g": "x",
+             "v": i} for i in range(3)]
+    if family == "shape":
+        return FAKE_V1.shape(_fake_env(spark, rows))
+    if family == "dedupe_last_wins":
+        return dedupe_last_wins(FAKE_V1.shape(_fake_env(spark, rows)), "my_id")
+    if family == "merge_exprs":
+        from webhookdb_spark.operators.upsert import upsert_envelopes
+        from webhookdb_spark.storage import Warehouse
+
+        seeded = (tmp_path / "wh").exists()
+        t = Warehouse(spark, tmp_path / "wh").table("org", "fake_v1")
+        if not seeded:
+            upsert_envelopes(t, _fake_env(spark, rows[:2]), FAKE_V1)
+        return build_merge(
+            t, FAKE_V1.shape(_fake_env(spark, rows)), FAKE_V1,
+            list(range(FAKE_V1.n_buckets)),
+        )
+    if family == "scd2_apply":
+        ev = spark.createDataFrame(
+            [(1, "2024-01-01", 1, "a"), (1, "2024-01-02", 2, "b")],
+            "user_id long, ts string, event_id long, state string",
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        hist = H.scd2_history(ev, "user_id", ("state",), "ts", "event_id")
+        return H.scd2_apply(hist, ev, "user_id", ("state",), "ts", "event_id")
+    if family == "expectation_reason":
+        df = spark.createDataFrame([(1, 5)], "i int, x int")
+        return df.select(expectation_reason(
+            [("not_null", "x"), ("between", "x", 0, 10), ("in_set", "x", [5])]
+        ))
+    if family == "digest":
+        df = spark.createDataFrame([(1, "a"), (2, None)], "k long, s string")
+        return DG.table_digest(df)
+    if family == "minhash":
+        df = spark.createDataFrame([(1, "hello world")], "doc_id long, text string")
+        return minhash_signatures(df, n_hashes=4)
+    if family == "cos_named":
+        df = spark.createDataFrame(
+            [([1.0, 0.0], [0.5, 0.5])], "a array<double>, b array<double>"
+        )
+        return df.select(S._cos_named("a", "b"))
+    raise AssertionError(family)
+
+
+_MEMO_FAMILIES = {
+    "shape": "shape",
+    "merge_exprs": "merge_exprs",
+    "dedupe_last_wins": "dedupe_last_wins",
+    "scd2_apply": "scd2_apply",
+    "expectation_reason": "expectation_reason",
+    "matview": "ivm",
+    "digest": "digest_row_hash",
+    "minhash": "minhash_sigs",
+    "cos_named": "cos_named",
+}
+
+
+@pytest.mark.parametrize("family", sorted(_MEMO_FAMILIES))
+def test_memo_hit_plan_equals_fresh_build(spark, tmp_path, monkeypatch, family):
+    """A memoized tree must analyze to exactly the plan a freshly built
+    one does: the memo saves driver round-trips, never changes a plan."""
+    from webhookdb_spark.operators import util
+
+    if family == "matview":
+        build = _matview_plan_builder(spark, tmp_path, monkeypatch)
+    else:
+        def build():
+            return _memo_family_df(family, spark, tmp_path)
+
+    build()  # warm the memo
+    prefix = _MEMO_FAMILIES[family]
+    assert any(k[0] == prefix for k in util._MEMO), f"{family} not memoized"
+    hit = _analyzed_modulo_ids(build())
+    util._MEMO.clear()
+    fresh = _analyzed_modulo_ids(build())
+    assert hit == fresh
+
+
+def _matview_plan_builder(spark, tmp_path, monkeypatch):
+    """The aggregate an IncrementalAggMaintainer writes, captured at its
+    parquet write: a fresh maintainer per call folds the same feed."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from webhookdb_spark.operators.matview import IncrementalAggMaintainer
+    from webhookdb_spark.operators.upsert import upsert_envelopes
+    from webhookdb_spark.replicators.fake import FAKE_V1
+    from webhookdb_spark.storage import Warehouse
+
+    t = Warehouse(spark, tmp_path / "wh").table("org", "fake_v1")
+    upsert_envelopes(t, _fake_env(spark, [
+        {"my_id": "a", "at": "2024-01-01T00:00:00Z", "g": "x", "v": 1},
+        {"my_id": "b", "at": "2024-01-01T00:00:00Z", "g": "y", "v": 2},
+    ]), FAKE_V1)
+    written = []
+    write_parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return write_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+
+    def project(b):
+        data = F.col("data").cast("string")
+        return b.select(
+            "my_id",
+            F.get_json_object(data, "$.g").alias("g"),
+            F.get_json_object(data, "$.v").cast("long").alias("v"),
+        )
+
+    def build():
+        IncrementalAggMaintainer(
+            spark, str(tmp_path / f"ivm{len(written)}"), "my_id", "g", "v",
+            project=project,
+        ).run(t)
+        return written[-1]  # the aggregate (state is written first)
+
+    return build

@@ -438,7 +438,7 @@ def test_ivfpq_recall_floor_and_probe_containment(spark):
     q = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"))
         .crossJoin(F.broadcast(cent_df))
-        .withColumn("cscore", S.cosine(F.col("q_vec"), F.col("cent_vec")))
+        .withColumn("cscore", S._cos_named("q_vec", "cent_vec"))
     )
     pw = W.partitionBy("query_id").orderBy(F.col("cscore").desc(), F.col("cent_id").asc())
     for r in (

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from webhookdb_spark.operators.util import memo_col
+
 
 def scd2_history(
     df: DataFrame,
@@ -171,7 +173,7 @@ def scd2_apply(
     closed = touched.where(~F.col("is_current"))
     cur = touched.where(F.col("is_current"))
 
-    x = _scd2_apply_exprs(
+    args = (
         key_col,
         tuple(attr_cols),
         ts_col,
@@ -179,6 +181,7 @@ def scd2_apply(
         dict(batch.dtypes)[seq_col] if seq_col else None,
         open_end_ts,
     )
+    x = memo_col(("scd2_apply", *args), lambda: _scd2_apply_exprs(*args))
 
     # Pseudo-event: each touched key's current state re-asserted at its
     # valid_from with _src=0, so it sorts before any equal-ts batch
@@ -222,9 +225,6 @@ def scd2_apply(
     )
 
 
-_SCD2_APPLY_MEMO: dict[tuple, dict] = {}
-
-
 def _scd2_apply_exprs(
     key_col: str,
     attr_cols: tuple[str, ...],
@@ -233,16 +233,12 @@ def _scd2_apply_exprs(
     seq_dtype: str | None,
     open_end_ts: str | None,
 ) -> dict:
-    """The pure expression trees of :func:`scd2_apply`, memoized on the
-    full parameter tuple: the feed maintainers run one apply per batch
-    window, and each rebuild cost one py4j round-trip per Column
-    operator (guide §5 driver work). Trees reference column NAMES only,
-    so reuse across batches is exactly the module-level-constant
-    semantics."""
-    mkey = (key_col, attr_cols, ts_col, seq_col, seq_dtype, open_end_ts)
-    hit = _SCD2_APPLY_MEMO.get(mkey)
-    if hit is not None:
-        return hit
+    """The pure expression trees of :func:`scd2_apply`, which memoizes
+    them on the full parameter tuple: the feed maintainers run one apply
+    per batch window, and each rebuild cost one py4j round-trip per
+    Column operator (guide §5 driver work). Trees reference column
+    NAMES only, so reuse across batches is exactly the
+    module-level-constant semantics."""
     order = [F.col(ts_col), F.col("_src")] + (
         [F.col(seq_col)] if seq_col else []
     )
@@ -310,7 +306,7 @@ def _scd2_apply_exprs(
             "is_current"
         ),
     ]
-    hit = {
+    return {
         "pseudo_cols": pseudo_cols,
         "batch_cols": batch_cols,
         "lag_cols": lag_cols,
@@ -319,8 +315,6 @@ def _scd2_apply_exprs(
         "nv_out_cols": nv_out_cols,
         "cur_upd_cols": cur_upd_cols,
     }
-    _SCD2_APPLY_MEMO[mkey] = hit
-    return hit
 
 
 def scd2_from_feed(

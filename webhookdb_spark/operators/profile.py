@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from webhookdb_spark.operators.util import memo_col
+
 _NUM_TYPES = ("int", "bigint", "double", "float", "decimal", "smallint", "tinyint")
 
 
@@ -511,9 +513,6 @@ def sql_fd_audit(table: str, candidates: list[tuple[str, str]]) -> str:
     return " UNION ALL ".join(selects)
 
 
-_REASON_MEMO: dict[tuple, "Column"] = {}
-
-
 def expectation_reason(rules) -> "Column":
     """Per-ROW companion to :func:`check_expectations`: the first
     failing rule's name as a Column (NULL when every rule passes) —
@@ -531,9 +530,10 @@ def expectation_reason(rules) -> "Column":
         tuple(tuple(p) if isinstance(p, (list, tuple, set)) else p for p in r)
         for r in rules
     )
-    hit = _REASON_MEMO.get(mkey)
-    if hit is not None:
-        return hit
+    return memo_col(("expectation_reason", mkey), lambda: _build_reason(rules))
+
+
+def _build_reason(rules) -> "Column":
     reason = None
     for rule in rules:
         kind, col = rule[0], rule[1]
@@ -563,6 +563,4 @@ def expectation_reason(rules) -> "Column":
             raise ValueError(f"unknown rule kind: {kind}")
         arm = F.when(cond, F.lit(name))
         reason = arm if reason is None else reason.when(cond, F.lit(name))
-    out = reason if reason is not None else F.lit(None).cast("string")
-    _REASON_MEMO[mkey] = out
-    return out
+    return reason if reason is not None else F.lit(None).cast("string")

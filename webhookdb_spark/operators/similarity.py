@@ -24,42 +24,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from webhookdb_spark.operators.util import bind, lit_doubles, scale_out
+from webhookdb_spark.operators.util import bind, lit_doubles, scale_out, sql_doubles
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-# -- Spark-SQL text twins of the Column builders above ------------------------
+# -- vector arithmetic as Spark-SQL text --------------------------------------
 # The ANN operators compose deep higher-order expressions (fold dots,
 # norms, per-cell scores, ADC LUTs) around data-derived literals. Built
 # through the Column API that costs one py4j round-trip per operator
 # (~0.13-0.5 ms), and the Lloyd train loops rebuild them each iteration
 # with FRESH literals, so memoization never hits there. Rendering the
-# same expression as Spark-SQL text (pure Python string work) and
-# parsing it with ONE F.expr call yields the identical tree — the SQL
-# parser builds the same Cast/Multiply/aggregate nodes the Column API
-# does, pinned by the ANN family's full value-hash oracles (guide §5
-# driver work). Each *_sql helper mirrors its Column twin EXACTLY
+# expression as Spark-SQL text (pure Python string work) and parsing it
+# with ONE F.expr call yields the same Cast/Multiply/aggregate tree the
+# Column API would, pinned by the ANN family's full value-hash oracles
+# (guide §5 driver work). :func:`_l2sq` and :func:`_dot_pre` stay
+# Column builders because they run inside ``transform`` lambdas, where
+# a text rendering cannot reach; their SQL twins mirror them EXACTLY
 # (casts included) so fold order and rounding are bit-identical.
 
 def _sqdot(a: str, b: str) -> str:
-    """SQL twin of :func:`_dot`."""
+    """Dot product of two numeric arrays, each element cast to DOUBLE
+    and folded left to right from 0.0."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
         f"CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
@@ -75,7 +59,8 @@ def _sqdot_pre(a: str, b: str) -> str:
 
 
 def _sqnorm(a: str) -> str:
-    """SQL twin of :func:`_norm`."""
+    """L2 norm of a numeric array: sqrt of the left fold of its
+    DOUBLE-cast squares (the fold order :func:`_sqdot` uses)."""
     return (
         f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
         f"CAST(x AS DOUBLE)), 0.0D, (acc, x) -> acc + x))"
@@ -91,7 +76,11 @@ def _sql2sq(a: str, b: str) -> str:
 
 
 def _sqcos(a: str, b: str) -> str:
-    """SQL twin of :func:`cosine` (incl. the zero-norm 0.0 guard)."""
+    """Cosine similarity rounded to 6 places, defined as 0.0 when either
+    vector has zero norm (a degenerate-but-real corpus case:
+    zeroed/padded embeddings; found by the round-5 property test — ANSI
+    Spark throws DIVIDE_BY_ZERO while DuckDB's double division silently
+    yields NULL, so BOTH engines need the explicit convention)."""
     na, nb = _sqnorm(a), _sqnorm(b)
     return (
         f"round(CASE WHEN ({na} * {nb}) = 0.0D THEN 0.0D "
@@ -99,23 +88,10 @@ def _sqcos(a: str, b: str) -> str:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity, defined as 0.0 when either vector has zero
-    norm (a degenerate-but-real corpus case: zeroed/padded embeddings;
-    found by the round-5 property test — ANSI Spark throws
-    DIVIDE_BY_ZERO while DuckDB's double division silently yields NULL,
-    so BOTH engines need the explicit convention)."""
-    denom = _norm(a) * _norm(b)
-    return F.round(
-        F.when(denom == 0.0, F.lit(0.0)).otherwise(_dot(a, b) / denom), 6
-    )
-
-
 def _cos_named(a: str, b: str) -> Column:
-    """:func:`cosine` over two NAMED columns, memoized — the tree binds
-    by name at analysis time and building it costs ~40 py4j round-trips
-    (guide §5). The SQL text parses to the identical Cast/CaseWhen/fold
-    tree (pinned by the ANN family's value-hash oracles)."""
+    """:func:`_sqcos` over two NAMED columns, memoized — the tree binds
+    by name at analysis time, so one parse serves every caller (guide
+    §5; the value pinned by the ANN family's value-hash oracles)."""
     from webhookdb_spark.operators.util import memo_col
 
     return memo_col(
@@ -124,7 +100,7 @@ def _cos_named(a: str, b: str) -> Column:
 
 
 def _norm_named(c: str) -> Column:
-    """:func:`_norm` of a NAMED column, memoized (see :func:`_cos_named`)."""
+    """:func:`_sqnorm` of a NAMED column, memoized (see :func:`_cos_named`)."""
     from webhookdb_spark.operators.util import memo_col
 
     return memo_col(("norm_named", c), lambda: F.expr(_sqnorm(f"`{c}`")))
@@ -271,7 +247,7 @@ def _decon_probes(
     # e_norm hoists to a per-ROW column here (the same ~3x lesson as
     # embed_decontaminate) so the per-PAIR work downstream is one dot
     # fold; round(dot/(t_norm*e_norm), 6) is the identical arithmetic
-    # chain to :func:`cosine`'s inline form.
+    # chain to :func:`_sqcos`'s inline form.
     return (
         q.withColumn("prank", F.row_number().over(pw))
         .where(F.col("prank") <= nprobe)
@@ -1023,7 +999,7 @@ def ivf_assign(
     norms_sql = sql_doubles(
         [math.sqrt(sum(x * x for x in c)) for c in centroids]
     )
-    # zero-norm guard matches :func:`cosine`'s 0.0 convention
+    # zero-norm guard matches :func:`_sqcos`'s 0.0 convention
     scores = F.expr(
         f"zip_with({cents_sql}, {norms_sql}, (c, nrm) -> "
         f"round(CASE WHEN (_vn * nrm) = 0.0D THEN 0.0D ELSE "
@@ -1101,7 +1077,7 @@ def ann_topk_ivf(
     )
 
 
-# zero-norm guard matches :func:`cosine`'s 0.0 convention
+# zero-norm guard matches :func:`_sqcos`'s 0.0 convention
 _SQL_COS = (
     "round(CASE WHEN"
     " sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
@@ -2176,16 +2152,15 @@ def embedding_cluster_profile(
         cents = ivf_refine(corpus, cents, id_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
 
-    cents_lit = lit_doubles([list(c) for c in cents])
-    norms_lit = lit_doubles([math.sqrt(sum(x * x for x in c)) for c in cents])
-    cvec = F.element_at(cents_lit, F.col("cent_id") + 1)
-    cnrm = F.element_at(norms_lit, F.col("cent_id") + 1)
-    vn = _norm(F.col("c_vec"))
-    score = F.round(
-        F.when(vn * cnrm == 0.0, F.lit(0.0)).otherwise(
-            _dot(F.col("c_vec"), cvec) / (vn * cnrm)
-        ),
-        6,
+    cvec = f"element_at({sql_doubles([list(c) for c in cents])}, cent_id + 1)"
+    cnrm = (
+        f"element_at({sql_doubles([math.sqrt(sum(x * x for x in c)) for c in cents])}"
+        ", cent_id + 1)"
+    )
+    vn = _sqnorm("c_vec")
+    score = F.expr(
+        f"round(CASE WHEN ({vn} * {cnrm}) = 0.0D THEN 0.0D "
+        f"ELSE {_sqdot('c_vec', cvec)} / ({vn} * {cnrm}) END, 6)"
     )
     # floor is ulp-safe here (r10 audit): score's chain is HOF folds
     # (fixed order) through +,-,*,/ and sqrt — all correctly-rounded

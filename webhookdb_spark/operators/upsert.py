@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 
 from webhookdb_spark.functions.converters import json_merge_udf
 from webhookdb_spark.spec import ReplicatorSpec
+from webhookdb_spark.operators.util import memo_col
 from webhookdb_spark.storage import CHANGES_PART, PART_COL, ManagedTable, bucket_expr
 
 ACTION_COL = "_action"
@@ -195,20 +196,16 @@ class IntegrationSequence:
             col, F.coalesce(F.col(col), fresh)).drop("_pid")
 
 
-_DEDUPE_AGG_MEMO: dict[tuple, Column] = {}
-
-_OBS_COUNT_EXPRS: list[Column] = []
-
-
 def _obs_count_exprs() -> list[Column]:
     """The constant insert/update/keep tallies every MERGE observes —
     built once (Observation.observe copies the trees into each plan)."""
-    if not _OBS_COUNT_EXPRS:
-        _OBS_COUNT_EXPRS.extend(
+    return memo_col(
+        ("merge_obs_counts",),
+        lambda: [
             F.count(F.when(F.col(ACTION_COL) == a, 1)).alias(a)
             for a in ("insert", "update", "keep")
-        )
-    return _OBS_COUNT_EXPRS
+        ],
+    )
 
 
 def _changes_fanout() -> Column:
@@ -250,16 +247,16 @@ def dedupe_last_wins(batch: DataFrame, key: str, order_col: str = "_received_at"
     # The agg expression is a pure tree of (key, order_col, columns) —
     # memoized because the ingest composites dedupe a batch with the
     # same shaped schema every MERGE cycle (guide §5 driver work).
-    mkey = (key, order_col, tuple(batch.columns))
-    agg = _DEDUPE_AGG_MEMO.get(mkey)
-    if agg is None:
+    cols = tuple(batch.columns)
+
+    def build() -> Column:
         order_cols = [F.col(order_col)]
-        if "_seq" in batch.columns:
+        if "_seq" in cols:
             order_cols.append(F.col("_seq"))
-        others = [c for c in batch.columns if c != key]
-        agg = _DEDUPE_AGG_MEMO[mkey] = F.max_by(
-            F.struct(*others), F.struct(*order_cols)
-        ).alias("_r")
+        others = [c for c in cols if c != key]
+        return F.max_by(F.struct(*others), F.struct(*order_cols)).alias("_r")
+
+    agg = memo_col(("dedupe_last_wins", key, order_col, cols), build)
     return batch.groupBy(key).agg(agg).select(key, "_r.*")
 
 
@@ -417,14 +414,15 @@ def _merge_exprs(
     trees are memoized per spec: the composite ingest queries run many
     MERGE cycles per query, and rebuilding these CASE chains cost one
     py4j round-trip per Column operator per cycle (guide §5)."""
-    memo = getattr(spec, "_merge_exprs_memo", None)
-    if memo is None:
-        memo = {}
-        object.__setattr__(spec, "_merge_exprs_memo", memo)
-    hit = memo.get((key, data_cols))
-    if hit is not None:
-        return hit
+    return memo_col(
+        ("merge_exprs", spec, key, data_cols),
+        lambda: _build_merge_exprs(spec, key, data_cols),
+    )
 
+
+def _build_merge_exprs(
+    spec: ReplicatorSpec, key: str, data_cols: tuple[str, ...]
+) -> tuple[Column, list[Column]]:
     def sc(name: str) -> Column:
         return F.col(f"s.{name}")
 
@@ -467,7 +465,6 @@ def _merge_exprs(
             .otherwise(upd)
         )
         out_cols.append(val.alias(name))
-    memo[(key, data_cols)] = (action, out_cols)
     return action, out_cols
 
 
@@ -677,21 +674,18 @@ def changes_since(
     )
 
 
-_LATEST_CHANGE_RN_MEMO: dict[str, Column] = {}
-
-
 def latest_change_per_key(changes: DataFrame, key: str) -> DataFrame:
     """Compact a :func:`changes_since` window to one row per key (the
     highest-txn post-image) — what a warehouse MERGE consumer wants.
     The window partitions on the key: per-key work, never global.
     The row_number-over-window tree is memoized per key (guide §5:
     the feed consumers compact every sync cycle)."""
-    rn = _LATEST_CHANGE_RN_MEMO.get(key)
-    if rn is None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(key).orderBy(F.col("_txn").desc())
-        rn = _LATEST_CHANGE_RN_MEMO[key] = F.row_number().over(w)
+    rn = memo_col(
+        ("latest_change_rn", key),
+        lambda: F.row_number().over(
+            Window.partitionBy(key).orderBy(F.col("_txn").desc())
+        ),
+    )
     return (
         changes.withColumn("_rn", rn)
         .where(F.col("_rn") == 1)

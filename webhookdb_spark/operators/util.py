@@ -15,6 +15,10 @@ this a no-op there; it only fires for coarse inputs.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -101,10 +105,15 @@ def sql_str_list(items) -> str:
     return ", ".join(sql_str_lit(x) for x in items)
 
 
-_COL_MEMO: dict[tuple, Column] = {}
+# The package's one expression cache (see :func:`memo_col`).
+MEMO_BOUND = 4096
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
+_memo_sc = None  # the SparkContext the stored trees were built under
+_MISS = object()
 
 
-def memo_col(key: tuple, build) -> Column:
+def memo_col(key: tuple, build):
     """Memoize a pure constructed Column expression by parameter key.
 
     A Column is an immutable unresolved expression tree, but BUILDING
@@ -114,10 +123,29 @@ def memo_col(key: tuple, build) -> Column:
     (guide §5: driver work). Keys must capture every parameter the
     expression depends on (column NAMES, not DataFrames — the trees
     bind by name at analysis time, so reuse across inputs is exactly
-    the semantics of writing the expression once at module level)."""
-    hit = _COL_MEMO.get(key)
-    if hit is None:
-        hit = _COL_MEMO[key] = build()
+    the semantics of writing the expression once at module level).
+    ``build()`` may return a Column or a list/tuple/dict of Columns.
+
+    The store is LRU-bounded by ``MEMO_BOUND`` and belongs to the
+    active SparkContext: trees hold that context's JVM handles, so the
+    store is emptied when the context changes (a plain attribute read,
+    no py4j call)."""
+    global _memo_sc
+    sc = SparkContext._active_spark_context
+    with _MEMO_LOCK:
+        if sc is not _memo_sc:
+            _MEMO.clear()
+            _memo_sc = sc
+        hit = _MEMO.get(key, _MISS)
+        if hit is not _MISS:
+            _MEMO.move_to_end(key)
+            return hit
+    hit = build()
+    with _MEMO_LOCK:
+        if sc is _memo_sc:
+            _MEMO[key] = hit
+            while len(_MEMO) > MEMO_BOUND:
+                _MEMO.popitem(last=False)
     return hit
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webhookdb_spark.functions.converters import Converter
+from webhookdb_spark.operators.util import memo_col
 from webhookdb_spark.types import ColumnType, spark_type, validate_identifier
 
 # ---------------------------------------------------------------------------
@@ -254,7 +255,7 @@ def _attach_enrichment(envelopes: DataFrame, fetcher) -> DataFrame:
     return envelopes.mapInPandas(run, schema=schema)
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, eq=False)
 class ReplicatorSpec:
     """A stream definition (reference: Replicator::Base subclass).
 
@@ -480,27 +481,17 @@ class ReplicatorSpec:
         # them costs hundreds of py4j round-trips per call (one per
         # Column operator), and the composite ingest queries shape a
         # dozen batches per run. Memoized per spec instance (guide §5:
-        # the driver should do almost no per-batch work).
-        mkey = (
-            body_col,
-            engine,
-            "received_at" in envelopes.columns,
-            "_seq" in envelopes.columns,
+        # the driver should do almost no per-batch work); the spec is
+        # compared by identity, so a dataclasses.replace copy is its own
+        # key even when it keeps the name.
+        has_received_at = "received_at" in envelopes.columns
+        has_seq = "_seq" in envelopes.columns
+        resource0, resource1, event0, cols = memo_col(
+            ("shape", self, body_col, engine, has_received_at, has_seq),
+            lambda: self._build_shape_exprs(
+                body_col, engine, has_received_at=has_received_at, has_seq=has_seq
+            ),
         )
-        memo = getattr(self, "_shape_memo", None)
-        if memo is None:
-            memo = {}
-            object.__setattr__(self, "_shape_memo", memo)
-        hit = memo.get(mkey)
-        if hit is None:
-            hit = self._build_shape_exprs(
-                body_col,
-                engine,
-                has_received_at="received_at" in envelopes.columns,
-                has_seq="_seq" in envelopes.columns,
-            )
-            memo[mkey] = hit
-        resource0, resource1, event0, cols = hit
 
         if self.explode_body_array:
             # Array bodies fan out one element per row (order-preserving:

@@ -96,6 +96,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from webhookdb_spark.functions.converters import CONV_STR2HASH
+from webhookdb_spark.operators.util import memo_col
 
 PART_COL = "_part"
 # Reserved PART_COL values: staged like a bucket, never promoted into
@@ -261,20 +262,17 @@ class _ManifestLock:
         rel.unlink(missing_ok=True)
 
 
-_BUCKET_EXPR_MEMO: dict[tuple[str, int], "F.Column"] = {}
-
-
 def bucket_expr(key_col: str, n_buckets: int):
     """pmod(str2inthash(key), n) — reference partition routing
     (partitionable_mixin.rb:49-54). Memoized: the expression is a pure
     immutable tree of (key_col, n_buckets) and the ingest composites
     rebuild it several times per MERGE cycle (guide §5 driver work)."""
-    hit = _BUCKET_EXPR_MEMO.get((key_col, n_buckets))
-    if hit is None:
-        hit = _BUCKET_EXPR_MEMO[(key_col, n_buckets)] = F.pmod(
+    return memo_col(
+        ("bucket_expr", key_col, n_buckets),
+        lambda: F.pmod(
             CONV_STR2HASH.spark(F.col(key_col).cast("string")), F.lit(n_buckets)
-        )
-    return hit
+        ),
+    )
 
 
 @dataclass
