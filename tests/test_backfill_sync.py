@@ -610,6 +610,62 @@ def test_db_sync_crash_between_merge_and_watermark_is_idempotent(
     assert len(k0) == 1
 
 
+@pytest.mark.parametrize("mode", ["changes", "timestamp"])
+def test_db_sync_failed_replica_swap_loses_no_rows(
+    spark, tmp_warehouse, monkeypatch, mode
+):
+    """The rename that swaps the staged replica into place fails once:
+    the run raises with the watermark unmoved, and the re-run must
+    still end with every key in the replica. A swap that deleted the
+    old replica before the rename left no replica, and the re-run then
+    wrote only the window's rows."""
+    import os
+    from pathlib import Path
+
+    from webhookdb_spark.operators.upsert import upsert_envelopes
+    from webhookdb_spark.sinks.sync_target import DatabaseSyncTarget
+
+    t = Warehouse(spark, tmp_warehouse / "wh_swap").table("org", "fake_v1")
+    upsert_envelopes(t, _cdc_env(spark, [
+        {"my_id": f"k{i}", "at": "2024-01-01T00:00:00Z"} for i in range(6)
+    ]), FAKE_V1)
+    dest = tmp_warehouse / "replica_swap"
+    tgt = DatabaseSyncTarget(
+        state=SyncState(tmp_warehouse / "swap_st.json"), ts_col="at",
+        key_col="my_id", dest_path=dest,
+    )
+
+    def sync(now):
+        if mode == "changes":
+            return tgt.run_sync_changes(t, now)
+        return tgt.run_sync(t.read(), now)
+
+    assert sync("2024-01-02 00:00:00") == 6
+    upsert_envelopes(t, _cdc_env(spark, [
+        {"my_id": "k0", "at": "2024-01-03T00:00:00Z"},
+        {"my_id": "k6", "at": "2024-01-03T00:00:00Z"},
+    ]), FAKE_V1)
+
+    real_replace, failed = os.replace, []
+
+    def replace_failing_once(src, dst, *a, **kw):
+        if (not failed and Path(dst) == dest
+                and str(src).endswith(".staging")):
+            failed.append(src)
+            raise OSError("injected swap failure")
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", replace_failing_once)
+    with pytest.raises(OSError, match="injected swap failure"):
+        sync("2024-01-04 00:00:00")
+    assert failed
+    assert sync("2024-01-04 00:00:00") == 2
+    replica = spark.read.parquet(str(dest))
+    assert sorted(r.my_id for r in replica.collect()) == [
+        f"k{i}" for i in range(7)]
+    assert tgt.verify(t.read().select(*replica.columns)).count() == 0
+
+
 def test_extract_url_auth_spec_vectors():
     """spec/webhookdb/http_spec.rb:6-18 — the two pinned vectors, plus
     a port-preserving case."""

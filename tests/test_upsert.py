@@ -1283,3 +1283,39 @@ def test_add_columns_redo_skips_rewrite_when_backfill_complete(
     t2.add_columns([T.StructField("extra", T.LongType())],
                    backfill={"extra": F.lit(9)})
     assert t2.read().collect()[0]["extra"] == 9
+
+
+@pytest.mark.parametrize("keep_versions", [0, 1])
+@pytest.mark.parametrize("op", ["merge_upsert", "delete_where"])
+def test_write_cas_pins_the_snapshot_that_planned_it(
+        spark, tmp_warehouse, monkeypatch, op, keep_versions):
+    """merge_upsert and delete_where plan from one manifest load and
+    must CAS against it: a commit landing before their overwrite must
+    raise ConcurrentWriteError and leave the competing row intact. CAS
+    against a later load let such a commit pass; the stale write then
+    overwrote it (keep_versions>=1) or died reading the GC'd files
+    (keep_versions=0)."""
+    from webhookdb_spark.storage import ConcurrentWriteError
+
+    t = ManagedTable(spark, tmp_warehouse / "org" / "cas_snapshot")
+    t.create(FAKE_V1.schema(), key="my_id", n_buckets=1,
+             keep_versions=keep_versions)
+    upsert_envelopes(t, env_df(spark, [
+        {"my_id": "a", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
+
+    orig = ManagedTable.overwrite_buckets
+
+    def rival_commits_first(self, df, buckets, *a, **kw):
+        monkeypatch.setattr(ManagedTable, "overwrite_buckets", orig)
+        upsert_envelopes(t, env_df(spark, [
+            {"my_id": "rival", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
+        return orig(self, df, buckets, *a, **kw)
+
+    monkeypatch.setattr(ManagedTable, "overwrite_buckets", rival_commits_first)
+    with pytest.raises(ConcurrentWriteError):
+        if op == "merge_upsert":
+            upsert_envelopes(t, env_df(spark, [
+                {"my_id": "mine", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
+        else:
+            t.delete_where(F.col("my_id") == "a")
+    assert sorted(r.my_id for r in t.read().collect()) == ["a", "rival"]

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from webhookdb_spark.operators.text import SQL_TOKENS, WS
 from webhookdb_spark.operators.util import bind, scale_out, sql_str_list, sql_str_lit
+from webhookdb_spark.storage import read_json, write_atomic
 
 DEFAULT_LANGS = ("en", "de", "fr", "es")
 DEFAULT_BLOCKED_SOURCES = ("src13", "src17")
@@ -653,7 +654,7 @@ def write_inverted_index(
         "text_col": text_col,
         "segments": ["seg_0"],
     }
-    (root / _II_META).write_text(_json.dumps(meta))
+    write_atomic(root / _II_META, _json.dumps(meta))
 
 
 def append_inverted_index(df_new: DataFrame, path: str) -> None:
@@ -672,14 +673,14 @@ def append_inverted_index(df_new: DataFrame, path: str) -> None:
     from pathlib import Path as _P
 
     root = _P(path)
-    meta = _json.loads((root / _II_META).read_text())
+    meta = read_json(root / _II_META)
     idx = inverted_index_bucketed(
         df_new, meta["text_col"], meta["n_shards"], meta["postings_per_row"]
     )
     seg = f"seg_{len(meta['segments'])}"
     _ii_write_segment(idx, root / seg)
     meta["segments"] = meta["segments"] + [seg]
-    (root / _II_META).write_text(_json.dumps(meta))
+    write_atomic(root / _II_META, _json.dumps(meta))
 
 
 def _ii_read_segments(
@@ -691,7 +692,7 @@ def _ii_read_segments(
     from pyspark.sql import types as _T
 
     root = _P(path)
-    meta = _json.loads((root / _II_META).read_text())
+    meta = read_json(root / _II_META)
     schema = _T.StructType.fromJson(_json.loads(meta["schema"]))
     parts = []
     for i, seg in enumerate(meta["segments"]):
@@ -812,7 +813,7 @@ def compact_inverted_index(spark, path: str) -> None:
     _ii_write_segment(merged, root / new_seg)
     old = meta["segments"]
     meta["segments"] = [new_seg]
-    (root / _II_META).write_text(_json.dumps(meta))
+    write_atomic(root / _II_META, _json.dumps(meta))
     for s in old:
         _sh.rmtree(root / s, ignore_errors=True)
 

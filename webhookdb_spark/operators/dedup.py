@@ -24,12 +24,15 @@ min over 128-bit integers, and portable to any engine with md5().
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from webhookdb_spark.operators.text import SQL_TOKENS, WS, ascii_lower, tokens
 from webhookdb_spark.operators.util import bind, memo_col, scale_out
+from webhookdb_spark.storage import read_json, write_atomic
 
 DEFAULT_N_HASHES = 8
 DEFAULT_BANDS = 4
@@ -1570,20 +1573,6 @@ def sql_source_span_leakage(table: str = "documents", k: int = 8) -> str:
 _SPAN_META = "_span_meta.json"
 
 
-def _span_meta_save(root, meta) -> None:
-    """Atomic meta-pointer flip (tmp + os.replace, the Manifest.save
-    pattern): a crash mid-write must leave the PREVIOUS segment list
-    readable — the freshly-written but unreferenced segment dir is
-    garbage, not corruption."""
-    import json as _json
-    import os as _os
-    import uuid as _uuid
-
-    tmp = root / f"{_SPAN_META}.{_uuid.uuid4().hex}.tmp"
-    tmp.write_text(_json.dumps(meta))
-    _os.replace(tmp, root / _SPAN_META)
-
-
 def _span_counts(df: DataFrame, k: int, text_col: str, n_shards: int) -> DataFrame:
     """Distinct window hashes with occurrence counts, sharded by a hex
     prefix of the hash (uniform by construction — md5)."""
@@ -1628,14 +1617,13 @@ def write_span_store(
     ``path`` as segment 0 (``seg_0/shard=<s>/*.parquet`` + a sidecar
     with the knobs and live segment list). Rows are sorted by hash
     within each shard so file-level min/max stats stay narrow."""
-    import json as _json
     from pathlib import Path as _P
 
     root = _P(path)
     _span_write_segment(_span_counts(df, k, text_col, n_shards), root / "seg_0")
     meta = {"k": k, "text_col": text_col, "n_shards": n_shards,
             "segments": ["seg_0"]}
-    _span_meta_save(root, meta)
+    write_atomic(root / _SPAN_META, json.dumps(meta))
 
 
 def append_span_store(df_new: DataFrame, path: str) -> None:
@@ -1643,26 +1631,24 @@ def append_span_store(df_new: DataFrame, path: str) -> None:
     O(batch) work, existing segments are never read or rewritten. The
     same hash may appear in several segments; readers treat the store
     as a multiset (counts add)."""
-    import json as _json
     from pathlib import Path as _P
 
     root = _P(path)
-    meta = _json.loads((root / _SPAN_META).read_text())
+    meta = read_json(root / _SPAN_META)
     seg = f"seg_{len(meta['segments'])}"
     _span_write_segment(
         _span_counts(df_new, meta["k"], meta["text_col"], meta["n_shards"]),
         root / seg,
     )
     meta["segments"] = meta["segments"] + [seg]
-    _span_meta_save(root, meta)
+    write_atomic(root / _SPAN_META, json.dumps(meta))
 
 
 def _span_store_frames(spark, path: str):
-    import json as _json
     from pathlib import Path as _P
 
     root = _P(path)
-    meta = _json.loads((root / _SPAN_META).read_text())
+    meta = read_json(root / _SPAN_META)
     frames = [
         spark.read.parquet(str(root / seg)) for seg in meta["segments"]
     ]
@@ -1676,7 +1662,6 @@ def compact_span_store(spark, path: str) -> None:
     """Merge all segments into one (counts added per hash), restoring
     the exact one-shot layout — run when the segment list grows past
     the point where per-probe union cost matters."""
-    import json as _json
     import shutil as _sh
     from pathlib import Path as _P
 
@@ -1692,7 +1677,7 @@ def compact_span_store(spark, path: str) -> None:
         _sh.rmtree(root / seg, ignore_errors=True)
     tmp.rename(root / "seg_0")
     meta["segments"] = ["seg_0"]
-    _span_meta_save(root, meta)
+    write_atomic(root / _SPAN_META, json.dumps(meta))
 
 
 def batch_span_novelty(

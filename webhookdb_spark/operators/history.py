@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from webhookdb_spark.operators.util import memo_col
+from webhookdb_spark.storage import VersionedState
 
 
 def scd2_history(
@@ -371,19 +372,18 @@ def scd2_from_feed(
     return history, watermark, len(txns)
 
 
-class Scd2Maintainer:
+class Scd2Maintainer(VersionedState):
     """Durable feed-driven SCD2 maintenance: persists the history table
     and the delivered-txn watermark under ``path``, so each ``run``
     folds only new transactions — the warehouse pattern where a
     dimension's version history is maintained by the ingest feed, with
     restart safety.
 
-    Layout: ``path/v_<txn>/`` (parquet history as of txn) +
-    ``path/meta.json`` ({"watermark": txn, "current": "v_<txn>"}).
-    The new version is fully written before meta.json flips to it
-    (the manifest-pointer pattern of storage.py), and the previous
-    version is kept for one generation so a reader holding the old
-    meta never sees missing files.
+    Layout (storage.VersionedState): ``path/v_<txn>/`` (parquet history
+    as of txn) + ``path/meta.json``. The new version is fully written
+    before meta.json flips to it, and the previous version is kept for
+    one generation so a reader holding the old meta never sees missing
+    files.
     """
 
     def __init__(
@@ -395,42 +395,21 @@ class Scd2Maintainer:
         ts_col: str = "ts",
         project=None,
     ) -> None:
-        import pathlib
-
-        self.spark = spark
-        self.path = pathlib.Path(path)
+        super().__init__(spark, path)
         self.key_col = key_col
         self.attr_cols = tuple(attr_cols)
         self.ts_col = ts_col
         self.project = project
 
-    def _meta(self) -> dict:
-        import json as _json
-
-        f = self.path / "meta.json"
-        if not f.exists():
-            return {"watermark": 0, "current": None}
-        return _json.loads(f.read_text())
-
-    @property
-    def watermark(self) -> int:
-        return int(self._meta()["watermark"])
-
     def history(self) -> DataFrame | None:
         """The persisted history table, or None before the first run."""
-        m = self._meta()
-        if not m["current"]:
-            return None
-        return self.spark.read.parquet(str(self.path / m["current"]))
+        return self._read()
 
     def run(self, table) -> int:
         """Fold new feed transactions; returns the count of
         transactions applied (``len(txns)``, matching
         ``IncrementalAggMaintainer.run`` — not the txn-id delta, which
         overcounts when the feed's txn ids are sparse)."""
-        import json as _json
-        import shutil as _sh
-
         m = self._meta()
         hist, new_wm, applied = scd2_from_feed(
             table, self.key_col, self.attr_cols, self.ts_col,
@@ -439,19 +418,8 @@ class Scd2Maintainer:
         )
         if applied <= 0 or hist is None:
             return 0
-        new_dir = f"v_{new_wm}"
-        hist.write.mode("overwrite").parquet(str(self.path / new_dir))
-        self.path.mkdir(parents=True, exist_ok=True)
-        tmp = self.path / "meta.json.tmp"
-        tmp.write_text(
-            _json.dumps({"watermark": new_wm, "current": new_dir})
-        )
-        tmp.replace(self.path / "meta.json")
-        # trim all but the just-replaced generation
-        keep = {new_dir, m["current"]}
-        for p in self.path.iterdir():
-            if p.name.startswith("v_") and p.name not in keep:
-                _sh.rmtree(p, ignore_errors=True)
+        hist.write.mode("overwrite").parquet(str(self.path / f"v_{new_wm}"))
+        self._commit(new_wm, m["current"])
         return applied
 
 

@@ -41,7 +41,12 @@ from collections.abc import Callable
 from pathlib import Path
 from typing import Any
 
-from webhookdb_spark.storage import ConcurrentWriteError, _ManifestLock
+from webhookdb_spark.storage import (
+    ConcurrentWriteError,
+    _ManifestLock,
+    read_json,
+    write_atomic,
+)
 
 #: Lock parameters sized for ARBITRARY-duration callbacks, not the
 #: microsecond manifest-commit window _ManifestLock defaults to. A
@@ -225,9 +230,9 @@ class _InMemory:
 
 
 class _InFiles:
-    """One JSON state file per key; crash-consistent via the storage
-    layer's write-temp-then-rename discipline, serialized by the same
-    identity-verified lock the manifest commit path uses."""
+    """One JSON state file per key; crash-consistent via
+    ``storage.write_atomic``, serialized by the same identity-verified
+    lock the manifest commit path uses."""
 
     def __init__(self, parent: Idempotency):
         self._root = parent.root
@@ -247,11 +252,7 @@ class _InFiles:
         return self._held
 
     def read(self, key: str):
-        p = self._dir(key) / "state.json"
-        try:
-            doc = json.loads(p.read_text())
-        except (OSError, ValueError):
-            return None, None
+        doc = read_json(self._dir(key) / "state.json", {})
         last = doc.get("last_run")
         return (
             dt.datetime.fromisoformat(last) if last else None,
@@ -277,6 +278,4 @@ class _InFiles:
             _, prev = self.read(key)
             if prev is not None:
                 doc["stored_result"] = prev
-        tmp = d / "state.json.tmp"
-        tmp.write_text(json.dumps(doc))
-        os.replace(tmp, d / "state.json")
+        write_atomic(d / "state.json", json.dumps(doc))

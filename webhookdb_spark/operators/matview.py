@@ -23,8 +23,8 @@ final aggregate), one key-equi join against contribution state
 restricted to the batch's keys, one group-keyed fold of the deltas
 into the (tiny) aggregate table. History size never enters.
 
-Persistence uses the staged-version-dir + atomic meta-pointer pattern
-of operators/history.py's Scd2Maintainer.
+Persistence is storage.VersionedState, shared with
+operators/history.py's Scd2Maintainer.
 """
 
 from __future__ import annotations
@@ -32,8 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webhookdb_spark.storage import VersionedState
 
-class IncrementalAggMaintainer:
+
+class IncrementalAggMaintainer(VersionedState):
     """Maintain ``(group, n_keys, total)`` — COUNT of keys and an
     exact BIGINT SUM of ``value_col`` per ``group_col`` of a managed
     table's CURRENT rows — from the table's MERGE change feed.
@@ -57,36 +59,11 @@ class IncrementalAggMaintainer:
         value_col: str,
         project=None,
     ) -> None:
-        import pathlib
-
-        self.spark = spark
-        self.path = pathlib.Path(path)
+        super().__init__(spark, path)
         self.key_col = key_col
         self.group_col = group_col
         self.value_col = value_col
         self.project = project
-
-    def _meta(self) -> dict:
-        import json as _json
-
-        f = self.path / "meta.json"
-        if not f.exists():
-            return {"watermark": 0, "current": None}
-        return _json.loads(f.read_text())
-
-    @property
-    def watermark(self) -> int:
-        return int(self._meta()["watermark"])
-
-    def _read(self, part: str, schema=None) -> DataFrame | None:
-        m = self._meta()
-        if not m["current"]:
-            return None
-        reader = self.spark.read
-        if schema is not None:
-            # Known layout: skip the footer schema-inference job.
-            reader = reader.schema(schema)
-        return reader.parquet(str(self.path / m["current"] / part))
 
     def state(self) -> DataFrame | None:
         """Per-key contributions (key, group, value), or None before
@@ -99,9 +76,6 @@ class IncrementalAggMaintainer:
 
     def run(self, table) -> int:
         """Fold new feed transactions; returns how many were applied."""
-        import json as _json
-        import shutil as _sh
-
         from webhookdb_spark.operators.upsert import (
             change_txns,
             changes_since,
@@ -230,13 +204,5 @@ class IncrementalAggMaintainer:
         )
 
         _release_local_checkpoint(fresh)
-        tmp = self.path / "meta.json.tmp"
-        tmp.write_text(
-            _json.dumps({"watermark": new_wm, "current": f"v_{new_wm}"})
-        )
-        tmp.replace(self.path / "meta.json")
-        keep = {f"v_{new_wm}", m["current"]}
-        for p in self.path.iterdir():
-            if p.name.startswith("v_") and p.name not in keep:
-                _sh.rmtree(p, ignore_errors=True)
+        self._commit(new_wm, m["current"])
         return len(txns)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from webhookdb_spark.operators.util import bind, lit_doubles, scale_out, sql_doubles
+from webhookdb_spark.storage import read_json, write_atomic
 
 
 # -- vector arithmetic as Spark-SQL text --------------------------------------
@@ -367,7 +368,7 @@ def decontaminate_ivf_index(
 
     from pyspark.sql import types as _T
 
-    meta = json.loads((Path(path) / "_ivf_meta.json").read_text())
+    meta = read_json(Path(path) / "_ivf_meta.json")
     cents = meta["centroids"]
     # One probe ranking, shared by the pruning collect and the
     # candidate join (query_ivf_index does the same) — persisted so
@@ -2333,7 +2334,7 @@ def write_lsh_index(
         "n_dims": n_dims,
         "schema": read_schema.json(),
     }
-    (Path(path) / "_lsh_meta.json").write_text(json.dumps(meta))
+    write_atomic(Path(path) / "_lsh_meta.json", json.dumps(meta))
 
 
 def query_lsh_index(
@@ -2358,7 +2359,7 @@ def query_lsh_index(
     import json
     from pathlib import Path
 
-    meta = json.loads((Path(path) / "_lsh_meta.json").read_text())
+    meta = read_json(Path(path) / "_lsh_meta.json")
     n_planes, n_tables = meta["n_planes"], meta["n_tables"]
     planes = hyperplanes(n_planes * n_tables, meta["n_dims"])
     sig_kernel = sign_signature_udf(planes)
@@ -2471,7 +2472,7 @@ def write_ivf_index(
         assigned.drop("cent_id").withColumn("cent_id", F.lit(0).cast("int")).schema
     )
     meta = {"centroids": cents, "schema": read_schema.json()}
-    (Path(path) / "_ivf_meta.json").write_text(json.dumps(meta))
+    write_atomic(Path(path) / "_ivf_meta.json", json.dumps(meta))
 
 
 def query_ivf_index(
@@ -2492,7 +2493,7 @@ def query_ivf_index(
 
     from pyspark.sql import types as _T
 
-    meta = json.loads((Path(path) / "_ivf_meta.json").read_text())
+    meta = read_json(Path(path) / "_ivf_meta.json")
     cents = meta["centroids"]
     cent_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -2550,10 +2551,9 @@ def append_to_lsh_index(
     incremental-dedup contract that the existing corpus is never
     rescanned. Queries over the grown index are indistinguishable from
     one built in a single shot."""
-    import json
     from pathlib import Path
 
-    meta = json.loads((Path(path) / "_lsh_meta.json").read_text())
+    meta = read_json(Path(path) / "_lsh_meta.json")
     n_planes, n_tables = meta["n_planes"], meta["n_tables"]
     planes = hyperplanes(n_planes * n_tables, meta["n_dims"])
     sig_kernel = sign_signature_udf(planes)
@@ -2583,10 +2583,9 @@ def append_to_ivf_index(
     retrained (retraining would move cell boundaries and strand the
     already-written corpus in stale cells; production IVF stores
     retrain offline and rebuild, they never retrain on append)."""
-    import json
     from pathlib import Path
 
-    meta = json.loads((Path(path) / "_ivf_meta.json").read_text())
+    meta = read_json(Path(path) / "_ivf_meta.json")
     cents = [[float(x) for x in c] for c in meta["centroids"]]
     assigned = ivf_assign(new_vectors, cents, id_col, vec_col)
     assigned.write.mode("append").partitionBy("cent_id").parquet(path)
@@ -2627,7 +2626,7 @@ def write_pq_index(
     codes = pq_encode(corpus, cbs, id_col, vec_col)
     codes.write.mode("overwrite").parquet(path)
     meta = {"codebooks": cbs, "schema": codes.schema.json()}
-    (Path(path) / "_pq_meta.json").write_text(json.dumps(meta))
+    write_atomic(Path(path) / "_pq_meta.json", json.dumps(meta))
 
 
 def query_pq_index(
@@ -2646,7 +2645,7 @@ def query_pq_index(
 
     from pyspark.sql import types as _T
 
-    meta = json.loads((Path(path) / "_pq_meta.json").read_text())
+    meta = read_json(Path(path) / "_pq_meta.json")
     cbs = [[list(map(float, cw)) for cw in cb] for cb in meta["codebooks"]]
     schema = _T.StructType.fromJson(json.loads(meta["schema"]))
     codes = spark.read.schema(schema).parquet(path)
@@ -2663,10 +2662,9 @@ def append_to_pq_index(
     with the SIDECAR codebooks — never retrained — and appended, so a
     grown index is indistinguishable from a one-shot build over the
     union (the codes of pre-existing vectors cannot change)."""
-    import json
     from pathlib import Path
 
-    meta = json.loads((Path(path) / "_pq_meta.json").read_text())
+    meta = read_json(Path(path) / "_pq_meta.json")
     cbs = [[list(map(float, cw)) for cw in cb] for cb in meta["codebooks"]]
     pq_encode(new_vectors, cbs, id_col, vec_col).write.mode("append").parquet(path)
 
@@ -2712,7 +2710,7 @@ def write_ivfpq_index(
         "codebooks": cbs,
         "schema": read_schema.json(),
     }
-    (Path(path) / "_ivfpq_meta.json").write_text(json.dumps(meta))
+    write_atomic(Path(path) / "_ivfpq_meta.json", json.dumps(meta))
 
 
 def query_ivfpq_index(
@@ -2734,7 +2732,7 @@ def query_ivfpq_index(
 
     from pyspark.sql import types as _T
 
-    meta = json.loads((Path(path) / "_ivfpq_meta.json").read_text())
+    meta = read_json(Path(path) / "_ivfpq_meta.json")
     cents = [[float(x) for x in c] for c in meta["centroids"]]
     cbs = [[list(map(float, cw)) for cw in cb] for cb in meta["codebooks"]]
     m, d = len(cbs), len(cbs[0][0])
@@ -2818,10 +2816,9 @@ def append_to_ivfpq_index(
     assigned with the SIDECAR centroids and encoded with the SIDECAR
     codebooks — neither is ever retrained on append — and appended into
     the same cent_id partition layout, so grown == one-shot exactly."""
-    import json
     from pathlib import Path
 
-    meta = json.loads((Path(path) / "_ivfpq_meta.json").read_text())
+    meta = read_json(Path(path) / "_ivfpq_meta.json")
     cents = [[float(x) for x in c] for c in meta["centroids"]]
     cbs = [[list(map(float, cw)) for cw in cb] for cb in meta["codebooks"]]
     cells = ivfpq_cells(new_vectors, cents, cbs, id_col, vec_col)
@@ -3140,14 +3137,13 @@ def write_pca_model(model: dict, path: str) -> None:
 
     p = Path(path)
     p.mkdir(parents=True, exist_ok=True)
-    (p / "_pca_model.json").write_text(json.dumps(model))
+    write_atomic(p / "_pca_model.json", json.dumps(model))
 
 
 def load_pca_model(path: str) -> dict:
-    import json
     from pathlib import Path
 
-    return json.loads((Path(path) / "_pca_model.json").read_text())
+    return read_json(Path(path) / "_pca_model.json")
 
 
 # -- Contrastive hard-negative mining ----------------------------------------

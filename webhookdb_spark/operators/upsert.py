@@ -35,7 +35,13 @@ from pyspark.sql.window import Window
 from webhookdb_spark.functions.converters import json_merge_udf
 from webhookdb_spark.spec import ReplicatorSpec
 from webhookdb_spark.operators.util import memo_col
-from webhookdb_spark.storage import CHANGES_PART, PART_COL, ManagedTable, bucket_expr
+from webhookdb_spark.storage import (
+    CHANGES_PART,
+    PART_COL,
+    ManagedTable,
+    bucket_expr,
+    read_json,
+)
 
 ACTION_COL = "_action"
 
@@ -63,11 +69,7 @@ class IntegrationSequence:
         self.lock_timeout = 30.0
 
     def watermark(self) -> int:
-        import json
-
-        if self.file.exists():
-            return json.loads(self.file.read_text())["watermark"]
-        return 0
+        return read_json(self.file, {"watermark": 0})["watermark"]
 
     def _reserve(self, n: int) -> int:
         """Atomically reserve ``n`` values; returns the watermark the
@@ -109,6 +111,9 @@ class IntegrationSequence:
             wm = self.watermark()
             # Writer-unique tmp: a holder stolen mid-section and the
             # thief must not interleave writes through one tmp path.
+            # Deliberately not storage.write_atomic: the holds() check
+            # must sit between the tmp write and the replace, and the
+            # helper would widen that window by a write plus an fsync.
             tmp = self.file.with_suffix(
                 f".tmp.{os.getpid()}.{_uuid.uuid4().hex}")
             tmp.write_text(json.dumps({"watermark": wm + n}))
@@ -336,8 +341,11 @@ def merge_upsert(
     merged = merged.observe(obs, *_obs_count_exprs())
     if capture_changes:
         merged = merged.withColumn(PART_COL, _changes_fanout())
+    # CAS against the snapshot that planned this merge (``m``): a
+    # commit landing after that load must fail this one, not be
+    # overwritten by a merge computed from the older buckets.
     committed_txn, committed_buckets = table.overwrite_buckets(
-        merged, affected, extra_cols=[ACTION_COL],
+        merged, affected, extra_cols=[ACTION_COL], expected_txn=m.txn,
         capture_changes=capture_changes)
     counts = obs.get
     # Change set (post-image of inserted/updated rows): feeds dependent

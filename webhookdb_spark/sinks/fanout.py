@@ -21,6 +21,8 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from webhookdb_spark.storage import write_atomic
+
 MAX_ATTEMPTS = 25  # webhook_subscription.rb:38
 DELIVER_TIMEOUT = 10.0  # webhook_subscription.rb:36-38
 
@@ -50,13 +52,12 @@ class DeliveryLedger:
         return [json.loads(l) for l in self.path.read_text().splitlines() if l]
 
     def _save(self, records: list[dict]) -> None:
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".tmp")
         # default=str: row payloads carry timestamps/dates/decimals from
         # Spark rows; they serialize as ISO strings, matching the JSON
         # the reference POSTs (webhook_subscription.rb:74-110).
-        tmp.write_text("".join(json.dumps(r, default=str) + "\n" for r in records))
-        tmp.replace(self.path)
+        write_atomic(
+            self.path,
+            "".join(json.dumps(r, default=str) + "\n" for r in records))
 
     def enqueue(self, sub_id: str, payload: dict) -> str:
         records = self._load()

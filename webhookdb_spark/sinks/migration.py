@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from webhookdb_spark.operators.upsert import merge_upsert
 from webhookdb_spark.spec import ReplicatorSpec
-from webhookdb_spark.storage import Warehouse
+from webhookdb_spark.storage import Warehouse, read_json, write_atomic
 
 
 class MigrationAlreadyFinished(RuntimeError):
@@ -38,14 +38,13 @@ class MigrationState:
     path: Path
 
     def load(self) -> dict:
-        if self.path.exists():
-            return json.loads(self.path.read_text())
-        return {"last_integration": "", "last_timestamp": None, "finished": False}
+        return read_json(self.path, {"last_integration": "",
+                                     "last_timestamp": None,
+                                     "finished": False})
 
     def save(self, **updates) -> dict:
         st = {**self.load(), **updates}
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        self.path.write_text(json.dumps(st))
+        write_atomic(self.path, json.dumps(st))
         return st
 
 

@@ -23,6 +23,8 @@ result set.
 from __future__ import annotations
 
 import json
+import os
+import shutil
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
@@ -30,6 +32,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from webhookdb_spark.storage import read_json, write_atomic
 
 DEFAULT_PAGE_SIZE = 200  # sync_target.rb:48-49
 DEFAULT_MIN_PERIOD = 600  # sync_target.rb:40-47
@@ -175,16 +179,11 @@ class SyncState:
     max_stats: int = 200  # sync_target.rb:38
 
     def load(self) -> dict:
-        if self.path.exists():
-            return json.loads(self.path.read_text())
-        return {"last_synced_at": None, "stats": []}
+        return read_json(self.path, {"last_synced_at": None, "stats": []})
 
     def save(self, state: dict) -> None:
         state["stats"] = state.get("stats", [])[-self.max_stats :]
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(state))
-        tmp.replace(self.path)
+        write_atomic(self.path, json.dumps(state))
 
 
 def dataset_to_sync(
@@ -434,36 +433,43 @@ class DatabaseSyncTarget:
     key_col: str
     dest_path: Path
 
+    def _merge_replica(self, pending: DataFrame) -> None:
+        """Upsert ``pending`` into the parquet replica at ``dest_path``
+        by ``key_col``: the merge is written to ``<dest>.staging`` and
+        swapped in by two renames, the live replica first set aside as
+        ``<dest>.old``. Renaming the staged dir beats re-reading it to
+        rewrite dest (a second full replica write per cycle). A crash
+        or failed rename between the two renames leaves ``<dest>.old``
+        and no dest; the next run puts it back before merging, so the
+        replica is never lost (the watermark has not moved, so that run
+        re-merges the same window, idempotent by key)."""
+        dest = Path(self.dest_path)
+        old = dest.with_name(dest.name + ".old")
+        if not dest.exists() and old.exists():
+            os.replace(old, dest)
+        if not dest.exists():
+            pending.write.parquet(str(dest))
+            return
+        # Replica layout is fixed (written from this same pending shape
+        # last cycle): pin the schema, skip footer inference.
+        existing = pending.sparkSession.read.schema(pending.schema).parquet(
+            str(dest))
+        merged = existing.join(
+            pending.select(self.key_col), on=self.key_col, how="left_anti"
+        ).unionByName(pending)
+        tmp = dest.with_name(dest.name + ".staging")
+        merged.write.mode("overwrite").parquet(str(tmp))
+        shutil.rmtree(old, ignore_errors=True)
+        os.replace(dest, old)
+        os.replace(tmp, dest)
+        shutil.rmtree(old, ignore_errors=True)
+
     def run_sync(self, df: DataFrame, now: str) -> int:
         st = self.state.load()
         pending = dataset_to_sync(df, self.ts_col, st.get("last_synced_at"), now)
         n = pending.count()
         if n:
-            spark = pending.sparkSession
-            dest = str(self.dest_path)
-            if Path(dest).exists():
-                # Replica layout is fixed (written from this same plan
-                # shape last cycle): pin the schema, skip footer inference.
-                existing = spark.read.schema(pending.schema).parquet(dest)
-                merged = (
-                    existing.join(
-                        pending.select(self.key_col), on=self.key_col, how="left_anti"
-                    )
-                    .unionByName(pending)
-                )
-                tmp = dest + ".staging"
-                merged.write.mode("overwrite").parquet(tmp)
-                # Swap the staged dir into place with a rename instead of
-                # re-reading tmp and rewriting dest (a second full replica
-                # write). Crash exposure is no wider than the overwrite
-                # path it replaces (overwrite also deletes dest first).
-                import os
-                import shutil
-
-                shutil.rmtree(dest, ignore_errors=True)
-                os.replace(tmp, dest)
-            else:
-                pending.write.parquet(dest)
+            self._merge_replica(pending)
         st["last_synced_at"] = now
         st.setdefault("stats", []).append({"synced": n, "at": now})
         self.state.save(st)
@@ -520,28 +526,7 @@ class DatabaseSyncTarget:
         pending = latest_change_per_key(window, table.manifest.key).drop(
             "_action", "_txn"
         ).observe(obs, F.count(F.lit(1)).alias("n"))
-        spark = pending.sparkSession
-        dest = str(self.dest_path)
-        if Path(dest).exists():
-            # Replica schema is fixed by the table's (it was written from
-            # this same pending shape): skip footer schema inference.
-            existing = spark.read.schema(pending.schema).parquet(dest)
-            merged = existing.join(
-                pending.select(self.key_col), on=self.key_col, how="left_anti"
-            ).unionByName(pending)
-            tmp = dest + ".staging"
-            merged.write.mode("overwrite").parquet(tmp)
-            # Rename-swap the staged replica instead of re-reading tmp and
-            # rewriting dest — that second pass rewrote the ENTIRE replica
-            # every sync cycle. Crash exposure is no wider than overwrite
-            # mode's own delete-then-write on dest.
-            import os
-            import shutil
-
-            shutil.rmtree(dest, ignore_errors=True)
-            os.replace(tmp, dest)
-        else:
-            pending.write.parquet(dest)
+        self._merge_replica(pending)
         n = int(obs.get["n"])
         st["last_synced_txn"] = int(max_txn)
         st.setdefault("stats", []).append({"synced": n, "at": now})

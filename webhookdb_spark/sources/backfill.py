@@ -35,7 +35,7 @@ from pyspark.sql import SparkSession
 from webhookdb_spark.operators.upsert import MergeResult, upsert_envelopes
 from webhookdb_spark.sources.envelopes import ENVELOPE_SCHEMA
 from webhookdb_spark.spec import ReplicatorSpec
-from webhookdb_spark.storage import Warehouse
+from webhookdb_spark.storage import Warehouse, read_json, write_atomic
 
 
 class BackfillAuthError(RuntimeError):
@@ -71,17 +71,12 @@ class CursorStore:
     path: Path
 
     def get(self, key: str) -> str | None:
-        if not self.path.exists():
-            return None
-        return json.loads(self.path.read_text()).get(key)
+        return read_json(self.path, {}).get(key)
 
     def set(self, key: str, value: str) -> None:
-        data = json.loads(self.path.read_text()) if self.path.exists() else {}
+        data = read_json(self.path, {})
         data[key] = value
-        self.path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(data))
-        tmp.replace(self.path)
+        write_atomic(self.path, json.dumps(data))
 
 
 @dataclass

@@ -29,20 +29,33 @@ tests):
 ===================  =======================================================
 Guarantee            Mechanism / test
 ===================  =======================================================
-Manifest flip is     ``Manifest.save`` writes a uuid-unique tmp file then
-ATOMIC               ``os.replace`` — a reader sees the old or the new
-                     manifest, never a torn one. Same pattern for the
-                     span-store meta pointer (``operators/dedup.py``,
-                     ``_span_meta.json``). tests/test_upsert.py (manifest
-                     persistence), tests/test_streaming_windows.py
-                     (span meta mid-stream).
+State files are      ``write_atomic`` is the one commit path for small
+ATOMIC               state files: a writer-unique tmp file, fsync,
+                     ``os.replace``, directory fsync — a reader (or a
+                     concurrent writer) sees the old or the new file,
+                     never a torn or missing one. Users: the manifest
+                     (``Manifest.save``), ``VersionedState``'s
+                     ``meta.json`` (IVM and SCD2 maintainers), sync
+                     state, backfill cursors, migration state, the
+                     delivery ledger, idempotency ``state.json``, and the
+                     span/inverted-index/LSH/IVF/PQ/IVF-PQ/PCA metas.
+                     ``read_json`` is the matching read. Sole exception:
+                     ``IntegrationSequence._reserve``, whose stolen-lock
+                     check sits between its tmp write and its replace.
+                     tests/test_state_files.py (racing writers and
+                     readers, guard scan).
 Commit is CAS        Verify→save runs under ``_ManifestLock`` re-checking
 (exactly one         the planned txn; of N racing writers exactly one
 winner)              commits, losers raise ``ConcurrentWriteError`` and
                      roll back ONLY their writer-unique
                      ``v{txn}_{wtoken}`` dirs — a loser can never delete
-                     a winner's data. tests/test_manifest_lock.py::
-                     test_steal_storm_mutual_exclusion.
+                     a winner's data. ``merge_upsert``, ``delete_where``
+                     and ``add_columns`` pass ``expected_txn`` from the
+                     manifest load that planned the write, so a commit
+                     landing after that load fails them too.
+                     tests/test_manifest_lock.py::
+                     test_steal_storm_mutual_exclusion, tests/
+                     test_upsert.py (CAS pins the planning snapshot).
 Lock steal is        A stealer measures (stat→read→stat, same-incarnation
 identity-verified    check), renames the lock aside, re-verifies the stale
                      content, and restores a fresh lock via ``os.link`` on
@@ -78,6 +91,14 @@ Retries are          A re-run of a failed MERGE re-plans from the current
 idempotent           manifest; committed effects are keyed by txn, so
                      replaying an uncommitted batch cannot double-apply.
                      tests/test_streaming_ingest.py (effectively-once).
+Replica swap keeps   ``DatabaseSyncTarget`` stages a sync's merged
+the replica          replica in ``<dest>.staging``, sets the live one
+                     aside as ``<dest>.old``, then renames the staged dir
+                     in; a crash or failed rename between the two leaves
+                     ``<dest>.old``, which the next run restores before
+                     merging (the watermark has not moved, so it
+                     re-merges the same window). tests/
+                     test_backfill_sync.py (failed swap rename).
 ===================  =======================================================
 """
 
@@ -262,6 +283,93 @@ class _ManifestLock:
         rel.unlink(missing_ok=True)
 
 
+_REQUIRED = object()
+
+
+def read_json(path: Path, default=_REQUIRED):
+    """Parse the JSON file at ``path``. A missing file returns
+    ``default``, or raises ``FileNotFoundError`` when none is given."""
+    try:
+        return json.loads(Path(path).read_text())
+    except FileNotFoundError:
+        if default is _REQUIRED:
+            raise
+        return default
+
+
+def write_atomic(path: Path, text: str) -> None:
+    """Atomically and durably replace the file at ``path`` with
+    ``text``, creating its directory if needed: every small state file
+    (manifest, watermarks, cursors, meta pointers) is committed here.
+
+    The tmp name is writer-unique, so concurrent writers never share
+    (and rename away) one another's tmp file, and ``os.replace`` means a
+    reader sees the old or the new text, never a torn or missing file.
+    File and directory are fsynced around the rename: without it a
+    power loss can persist the rename metadata ahead of the tmp file's
+    data blocks, leaving a zero-length or torn file."""
+    path = Path(path)
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f"{path.name}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    try:
+        dfd = os.open(path.parent, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    except OSError:
+        pass  # some filesystems refuse directory fsync
+
+
+class VersionedState:
+    """A feed consumer's state as ``path/v_<txn>/`` generations behind
+    the ``path/meta.json`` pointer ``{"watermark": txn, "current":
+    "v_<txn>"}`` (watermark 0 and no current before the first commit).
+
+    A run writes its new generation in full, then ``_commit`` flips the
+    pointer with :func:`write_atomic` and deletes every generation but
+    the new one and the one it replaced, so a reader still holding the
+    old pointer never sees missing files."""
+
+    def __init__(self, spark: SparkSession, path: str | Path) -> None:
+        self.spark = spark
+        self.path = Path(path)
+
+    def _meta(self) -> dict:
+        return read_json(self.path / "meta.json",
+                         {"watermark": 0, "current": None})
+
+    @property
+    def watermark(self) -> int:
+        return int(self._meta()["watermark"])
+
+    def _read(self, part: str = "", schema=None) -> DataFrame | None:
+        """``part`` of the current generation, or None before the first
+        commit; ``schema`` skips footer schema inference."""
+        current = self._meta()["current"]
+        if not current:
+            return None
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(str(self.path / current / part))
+
+    def _commit(self, txn: int, replaced: str | None) -> None:
+        """Point meta.json at the fully written ``v_<txn>`` and drop all
+        generations but it and ``replaced`` (the previous current)."""
+        new = f"v_{txn}"
+        write_atomic(self.path / "meta.json",
+                     json.dumps({"watermark": txn, "current": new}))
+        for p in self.path.iterdir():
+            if p.name.startswith("v_") and p.name not in (new, replaced):
+                shutil.rmtree(p, ignore_errors=True)
+
+
 def bucket_expr(key_col: str, n_buckets: int):
     """pmod(str2inthash(key), n) — reference partition routing
     (partitionable_mixin.rb:49-54). Memoized: the expression is a pure
@@ -301,29 +409,10 @@ class Manifest:
 
     @classmethod
     def load(cls, path: Path) -> "Manifest":
-        d = json.loads((path / "_manifest.json").read_text())
-        return cls(**d)
+        return cls(**read_json(path / "_manifest.json"))
 
     def save(self, path: Path) -> None:
-        tmp = path / f"_manifest.{uuid.uuid4().hex}.tmp"
-        # fsync file AND directory before/after the rename: without it
-        # a power loss can persist the rename metadata ahead of the tmp
-        # file's data blocks, leaving a zero-length/torn _manifest.json
-        # — the torn-manifest state the atomic-replace contract rules
-        # out (r13 code review).
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(self.__dict__))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path / "_manifest.json")
-        try:
-            dfd = os.open(path, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass  # some filesystems refuse directory fsync
+        write_atomic(path / "_manifest.json", json.dumps(self.__dict__))
 
 
 class ManagedTable:
@@ -833,7 +922,7 @@ class ManagedTable:
         to_write = remaining.select(
             *[f.name for f in fields], PART_COL
         ).unionByName(self._sentinel(fields, DISCARD_PART))
-        self.overwrite_buckets(to_write, affected)
+        self.overwrite_buckets(to_write, affected, expected_txn=m.txn)
         return int(obs.get["deleted"] or 0)
 
     # -- schema evolution (additive only, base.rb:557-631) -----------------
