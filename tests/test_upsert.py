@@ -1286,36 +1286,85 @@ def test_add_columns_redo_skips_rewrite_when_backfill_complete(
 
 
 @pytest.mark.parametrize("keep_versions", [0, 1])
-@pytest.mark.parametrize("op", ["merge_upsert", "delete_where"])
+@pytest.mark.parametrize("op", [
+    "merge_upsert", "delete_where", "delete_stale_rows",
+    "cancellation_sweep", "icalendar_sweep",
+])
 def test_write_cas_pins_the_snapshot_that_planned_it(
         spark, tmp_warehouse, monkeypatch, op, keep_versions):
-    """merge_upsert and delete_where plan from one manifest load and
-    must CAS against it: a commit landing before their overwrite must
-    raise ConcurrentWriteError and leave the competing row intact. CAS
+    """Every writer plans from one manifest load and must CAS against
+    it: a commit landing before its overwrite must raise
+    ConcurrentWriteError and leave the competing row intact. CAS
     against a later load let such a commit pass; the stale write then
     overwrote it (keep_versions>=1) or died reading the GC'd files
     (keep_versions=0)."""
-    from webhookdb_spark.storage import ConcurrentWriteError
+    import dataclasses
 
-    t = ManagedTable(spark, tmp_warehouse / "org" / "cas_snapshot")
-    t.create(FAKE_V1.schema(), key="my_id", n_buckets=1,
-             keep_versions=keep_versions)
-    upsert_envelopes(t, env_df(spark, [
-        {"my_id": "a", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
+    from webhookdb_spark.operators.retention import (
+        cancellation_sweep,
+        delete_stale_rows,
+    )
+    from webhookdb_spark.replicators.icalendar_calendar_v1 import (
+        _sweep,
+        sync_feed,
+    )
+    from webhookdb_spark.replicators.icalendar_event_v1 import (
+        ICALENDAR_EVENT_V1,
+    )
+    from webhookdb_spark.spec import Col
+    from webhookdb_spark.storage import ConcurrentWriteError, Warehouse
+    from webhookdb_spark.types import ColumnType
+
+    if op == "icalendar_sweep":
+        wh = Warehouse(spark, tmp_warehouse)
+        t = wh.table("org", ICALENDAR_EVENT_V1.table)
+        t.create(ICALENDAR_EVENT_V1.schema(), key="compound_identity",
+                 n_buckets=1, keep_versions=keep_versions,
+                 part_key="calendar_external_id")
+        ics = ("BEGIN:VCALENDAR\nBEGIN:VEVENT\nUID:ev\n"
+               "DTSTART:20240101T100000Z\nEND:VEVENT\nEND:VCALENDAR\n")
+
+        def add(cal):
+            sync_feed(spark, wh, "org", cal, ics)
+        key = "calendar_external_id"
+    else:
+        # cancellation_sweep needs a status column
+        spec = FAKE_V1 if op != "cancellation_sweep" else dataclasses.replace(
+            FAKE_V1, denorm_cols=(*FAKE_V1.denorm_cols,
+                                  Col("status", ColumnType.TEXT, optional=True)))
+        t = ManagedTable(spark, tmp_warehouse / "org" / "cas_snapshot")
+        t.create(spec.schema(), key="my_id", n_buckets=1,
+                 keep_versions=keep_versions)
+
+        def add(k):
+            upsert_envelopes(t, env_df(spark, [
+                {"my_id": k, "at": "2024-01-01T00:00:00Z"}]), spec)
+        key = "my_id"
+    add("a")
 
     orig = ManagedTable.overwrite_buckets
 
     def rival_commits_first(self, df, buckets, *a, **kw):
         monkeypatch.setattr(ManagedTable, "overwrite_buckets", orig)
-        upsert_envelopes(t, env_df(spark, [
-            {"my_id": "rival", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
+        add("rival")
         return orig(self, df, buckets, *a, **kw)
 
     monkeypatch.setattr(ManagedTable, "overwrite_buckets", rival_commits_first)
     with pytest.raises(ConcurrentWriteError):
         if op == "merge_upsert":
-            upsert_envelopes(t, env_df(spark, [
-                {"my_id": "mine", "at": "2024-01-01T00:00:00Z"}]), FAKE_V1)
-        else:
+            add("mine")
+        elif op == "delete_where":
             t.delete_where(F.col("my_id") == "a")
-    assert sorted(r.my_id for r in t.read().collect()) == ["a", "rival"]
+        elif op == "delete_stale_rows":
+            delete_stale_rows(t, "at", stale_cutoff="2024-01-02 00:00:00",
+                              lookback_cutoff="2023-12-31 00:00:00")
+        elif op == "cancellation_sweep":
+            cancellation_sweep(t, spark.createDataFrame([], "my_id string"),
+                               "my_id")
+        else:
+            _sweep(spark, t,
+                   synced_cals=spark.createDataFrame([("a",)], "cal string"),
+                   upserted=spark.createDataFrame([], "k string"),
+                   max_seqs=spark.createDataFrame(
+                       [], "cal string, ruid string, max_seq int"))
+    assert sorted(r[key] for r in t.read().collect()) == ["a", "rival"]

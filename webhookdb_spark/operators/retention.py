@@ -12,10 +12,12 @@ Reference:
 - Logged-webhook trims (logged_webhook.rb:40-90).
 
 Spark shape: snapshot isolation makes the chunking dance unnecessary —
-each is ONE declarative predicate applied via a bucket-scoped rewrite
-(delete = anti-filter overwrite; at 100 TB on Delta these are
-``DELETE FROM … WHERE`` / ``MERGE`` statements and the predicates
-partition-prune by date/bucket).
+each is ONE declarative predicate applied via a bucket-scoped rewrite,
+``ManagedTable._rewrite_buckets`` (delete = ``delete_where``'s
+anti-filter; the sweep = a row transform; both read and CAS against one
+manifest snapshot and count through an Observation on the write
+itself). At 100 TB on Delta these are ``DELETE FROM … WHERE`` /
+``MERGE`` statements and the predicates partition-prune by date/bucket.
 """
 
 from __future__ import annotations
@@ -24,22 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Column
 
-from webhookdb_spark.storage import PART_COL, ManagedTable, bucket_expr
-
-
-def _rewrite(table: ManagedTable, transform) -> tuple[int, int]:
-    """Apply a full-table transform; returns (rows_before, rows_after).
-
-    Local implementation rewrites all buckets; on Delta this is a
-    single DELETE/UPDATE with partition pruning.
-    """
-    df = table.read()
-    before = df.count()
-    m = table.manifest
-    out = transform(df).withColumn(PART_COL, bucket_expr(m.key, m.n_buckets))
-    after = out.count()
-    table.overwrite_buckets(out, list(range(m.n_buckets)))
-    return before, after
+from webhookdb_spark.storage import ManagedTable
 
 
 def delete_stale_rows(
@@ -74,24 +61,11 @@ def delete_stale_rows(
     )
     if condition is not None:
         doomed = doomed & condition
-    keep_pred = ~F.coalesce(doomed, F.lit(False))
-    cands = table.zonemap_candidates(
-        ts_col, lookback_cutoff, stale_cutoff, hi_inclusive=False
+    return table.delete_where(
+        F.coalesce(doomed, F.lit(False)),
+        buckets=lambda m: m.zonemap_candidates(
+            ts_col, lookback_cutoff, stale_cutoff, hi_inclusive=False),
     )
-    if cands is None:
-        before, after = _rewrite(table, lambda df: df.where(keep_pred))
-        return before - after
-    if not cands:
-        return 0
-    m = table.manifest
-    df = table.read(buckets=cands)
-    before = df.count()
-    out = df.where(keep_pred).withColumn(
-        PART_COL, bucket_expr(m.key, m.n_buckets)
-    )
-    after = out.count()
-    table.overwrite_buckets(out, cands)
-    return before - after
 
 
 def cancellation_sweep(
@@ -106,30 +80,25 @@ def cancellation_sweep(
     status := CANCELLED (icalendar_calendar_v1.rb:245-261).
     Returns number of rows flipped."""
     keys = upserted_keys.select(F.col(key_col).alias("__k")).distinct()
+    flip = (
+        F.col("__k").isNull()
+        & (F.lit(True) if scope is None else scope)
+        & F.coalesce(F.col(status_col) != cancelled_value, F.lit(True))
+    )
 
     def transform(df: DataFrame) -> DataFrame:
-        joined = df.join(
+        return df.join(
             F.broadcast(keys), df[key_col] == F.col("__k"), "left_outer"
+        ).withColumn("__flip", flip).withColumn(
+            status_col,
+            F.when(F.col("__flip"), F.lit(cancelled_value))
+            .otherwise(F.col(status_col)),
         )
-        in_scope = F.lit(True) if scope is None else scope
-        flip = (
-            F.col("__k").isNull()
-            & in_scope
-            & (F.coalesce(F.col(status_col) != cancelled_value, F.lit(True)))
-        )
-        return joined.withColumn(
-            status_col, F.when(flip, F.lit(cancelled_value)).otherwise(F.col(status_col))
-        ).drop("__k")
 
-    df = table.read()
-    in_scope = F.lit(True) if scope is None else scope
-    flipped = (
-        df.join(keys, df[key_col] == F.col("__k"), "left_anti")
-        .where(in_scope & (F.coalesce(F.col(status_col) != cancelled_value, F.lit(True))))
-        .count()
-    )
-    _rewrite(table, transform)
-    return flipped
+    return table._rewrite_buckets(
+        transform=transform,
+        counts={"flipped": F.sum(F.col("__flip").cast("int"))},
+    )["flipped"]
 
 
 def trim_audit_log(

@@ -39,7 +39,6 @@ from webhookdb_spark.storage import (
     CHANGES_PART,
     PART_COL,
     ManagedTable,
-    bucket_expr,
     read_json,
 )
 
@@ -308,8 +307,12 @@ def merge_upsert(
     from pyspark.sql import Observation
 
     m = table.manifest
-    key = spec.remote_key.name
-    part_src = spec.partition_key_source or key
+    route = spec.partition_key_source or spec.remote_key.name
+    if route != m.route_col:
+        # rows routed by another column would land in buckets no reader
+        # or rewrite of this table routes to
+        raise ValueError(f"{spec.name} routes by {route!r} but table "
+                         f"{table.path} routes by {m.route_col!r}")
     if buckets is not None:
         # The hint skips discovery, but an empty batch must still take the
         # no-txn-churn early return below (discovery would have found no
@@ -326,7 +329,7 @@ def merge_upsert(
         # and Catalyst prunes the scan to the key column alone.
         affected = [
             r[0]
-            for r in batch.select(bucket_expr(part_src, m.n_buckets).alias(PART_COL))
+            for r in batch.select(m.bucket_col().alias(PART_COL))
             .distinct()
             .collect()
         ]
@@ -385,11 +388,8 @@ def build_merge(
     m = table.manifest
     key = spec.remote_key.name
     data_cols = [f.name for f in table.schema().fields]
-    part_src = spec.partition_key_source or key
 
-    batch = dedupe_last_wins(batch, key).withColumn(
-        PART_COL, bucket_expr(part_src, m.n_buckets)
-    )
+    batch = dedupe_last_wins(batch, key).withColumn(PART_COL, m.bucket_col())
     if not any(str(b) in m.buckets for b in affected):
         # All-insert fast path: every touched bucket is empty, so the
         # deduped batch IS the merge result — no join, no target scan.
@@ -398,7 +398,7 @@ def build_merge(
         )
     else:
         target = table.read(buckets=affected).withColumn(
-            PART_COL, bucket_expr(part_src, m.n_buckets)
+            PART_COL, m.bucket_col()
         )
 
         s = batch.alias("s")
@@ -502,7 +502,9 @@ def _shape_for_merge(
     """Shared shaping front-half of the ingest path: create the table,
     stamp the arrival ordinal, shape, fill sequence defaults."""
     if not table.exists():
-        table.create(spec.schema(), key=spec.remote_key.name, n_buckets=spec.n_buckets)
+        table.create(spec.schema(), key=spec.remote_key.name,
+                     n_buckets=spec.n_buckets,
+                     part_key=spec.partition_key_source)
     if "_seq" not in envelopes.columns:
         # Arrival ordinal: duplicate keys in one batch resolve to the
         # LAST occurrence even when timestamps tie (backfiller.rb:75-83's

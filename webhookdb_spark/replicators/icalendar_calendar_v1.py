@@ -207,12 +207,6 @@ def sync_feeds_distributed(
             F.col("_seq"),
         )
         table = warehouse.table(org, ICALENDAR_EVENT_V1.table)
-        if not table.exists():
-            table.create(
-                ICALENDAR_EVENT_V1.schema(),
-                key="compound_identity",
-                n_buckets=ICALENDAR_EVENT_V1.n_buckets,
-            )
         result = upsert_envelopes(table, env, ICALENDAR_EVENT_V1)
         _sweep(
             spark, table,
@@ -241,12 +235,6 @@ def _upsert_and_sweep(spark, warehouse, org, max_seqs_by_cal, rows) -> MergeResu
     )
     env = spark.createDataFrame(env_rows, schema)
     table = warehouse.table(org, ICALENDAR_EVENT_V1.table)
-    if not table.exists():
-        table.create(
-            ICALENDAR_EVENT_V1.schema(),
-            key="compound_identity",
-            n_buckets=ICALENDAR_EVENT_V1.n_buckets,
-        )
     result = upsert_envelopes(table, env, ICALENDAR_EVENT_V1)
     upserted = spark.createDataFrame(
         [(r["compound_identity"],) for r in rows] or [("",)], "k string"
@@ -280,60 +268,48 @@ def _sweep(spark, table, synced_cals, upserted, max_seqs) -> None:
     trick ``delete_calendar_cascade`` uses and the Spark analog of the
     reference's single-partition delete (partitionable_mixin.rb:49-54).
     A one-calendar sync against a fleet-sized table rewrites exactly one
-    bucket. The bucket-id collect is metadata-sized (≤ n_buckets ints);
-    everything row-shaped stays distributed.
+    bucket. The calendar-id collect is metadata-sized (one string per
+    synced feed); everything row-shaped stays distributed. The table is
+    read and CAS-committed from one snapshot
+    (``ManagedTable._rewrite_buckets``).
     """
-    from webhookdb_spark.storage import PART_COL, bucket_expr
-
-    m = table.manifest
-    touched = sorted(
-        r["_b"]
-        for r in synced_cals.select(
-            bucket_expr("cal", m.n_buckets).cast("int").alias("_b")
-        )
-        .distinct()
-        .collect()
-    )
-    if not touched:
+    cals = [r[0] for r in synced_cals.distinct().collect()]
+    if not cals:
         return
-    df = table.read(buckets=touched)
     scope = synced_cals.select(F.col("cal").alias("_scope_cal")).distinct()
-    df = df.join(
-        F.broadcast(scope),
-        df.calendar_external_id == F.col("_scope_cal"),
-        "left_outer",
-    )
-    in_sync_scope = F.col("_scope_cal").isNotNull()
-    df = (
-        df.join(
+    keys = upserted.select(F.col("k")).distinct()
+
+    def transform(df):
+        df = df.join(
+            F.broadcast(scope),
+            df.calendar_external_id == F.col("_scope_cal"),
+            "left_outer",
+        )
+        df = df.join(
             F.broadcast(max_seqs),
             (df.calendar_external_id == max_seqs.cal)
             & (df.recurring_event_id == max_seqs.ruid),
             "left_outer",
         )
-        .where(
-            F.col("max_seq").isNull()
-            | (F.col("recurring_event_sequence") <= F.col("max_seq"))
+        joined = df.join(keys, df.compound_identity == F.col("k"), "left_outer")
+        flip = (
+            F.col("k").isNull()
+            & F.col("_scope_cal").isNotNull()
+            & (F.coalesce(F.col("status") != "CANCELLED", F.lit(True)))
         )
-        .drop("cal", "ruid", "max_seq")
+        return joined.withColumn(
+            "status", F.when(flip, F.lit("CANCELLED")).otherwise(F.col("status"))
+        ).withColumn(
+            "row_updated_at",
+            F.when(flip, F.current_timestamp()).otherwise(F.col("row_updated_at")),
+        )
+
+    table._rewrite_buckets(
+        buckets=lambda m: m.buckets_for("calendar_external_id", cals),
+        transform=transform,
+        keep=F.col("max_seq").isNull()
+        | (F.col("recurring_event_sequence") <= F.col("max_seq")),
     )
-    keys = upserted.select(F.col("k")).distinct()
-    joined = df.join(keys, df.compound_identity == F.col("k"), "left_outer")
-    flip = (
-        F.col("k").isNull()
-        & in_sync_scope
-        & (F.coalesce(F.col("status") != "CANCELLED", F.lit(True)))
-    )
-    swept = joined.withColumn(
-        "status", F.when(flip, F.lit("CANCELLED")).otherwise(F.col("status"))
-    ).withColumn(
-        "row_updated_at",
-        F.when(flip, F.current_timestamp()).otherwise(F.col("row_updated_at")),
-    ).drop("k", "_scope_cal")
-    swept = swept.withColumn(
-        PART_COL, bucket_expr(ICALENDAR_EVENT_V1.partition_key_source, m.n_buckets)
-    )
-    table.overwrite_buckets(swept, touched)
 
 
 def build_fetch_context(ics_text: str, content_type: str = "text/calendar") -> dict:
@@ -378,21 +354,13 @@ def delete_calendar_cascade(warehouse, org: str, external_id: str) -> dict[str, 
     the Spark analog of the reference's ``append_partition_key``
     single-partition delete (icalendar_calendar_v1.rb:145-149).
     """
-    from webhookdb_spark.functions.converters import str2inthash_py
-
     deleted: dict[str, int] = {}
-    cal = warehouse.table(org, ICALENDAR_CALENDAR_V1.table)
-    if cal.exists():
-        b = str2inthash_py(external_id) % cal.manifest.n_buckets
-        deleted[ICALENDAR_CALENDAR_V1.table] = cal.delete_where(
-            F.col("external_id") == external_id, buckets=[b]
-        )
-    ev = warehouse.table(org, ICALENDAR_EVENT_V1.table)
-    if ev.exists():
-        b = str2inthash_py(external_id) % ev.manifest.n_buckets
-        deleted[ICALENDAR_EVENT_V1.table] = ev.delete_where(
-            F.col("calendar_external_id") == external_id,
-            buckets=[b],
-            part_key=ICALENDAR_EVENT_V1.partition_key_source,
-        )
+    for spec, col in ((ICALENDAR_CALENDAR_V1, "external_id"),
+                      (ICALENDAR_EVENT_V1, "calendar_external_id")):
+        t = warehouse.table(org, spec.table)
+        if t.exists():
+            deleted[spec.table] = t.delete_where(
+                F.col(col) == external_id,
+                buckets=lambda m, col=col: m.buckets_for(col, [external_id]),
+            )
     return deleted

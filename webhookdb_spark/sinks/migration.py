@@ -79,7 +79,8 @@ def migrate_organization(
         dst_table = dst.table(org, spec.table)
         if not dst_table.exists():
             dst_table.create(
-                spec.schema(), key=spec.remote_key.name, n_buckets=spec.n_buckets
+                spec.schema(), key=spec.remote_key.name,
+                n_buckets=spec.n_buckets, part_key=spec.partition_key_source,
             )
         df = src_table.read()
         # The timestamp half of the cursor applies only to the table a

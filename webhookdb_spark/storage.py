@@ -44,18 +44,39 @@ ATOMIC               state files: a writer-unique tmp file, fsync,
                      check sits between its tmp write and its replace.
                      tests/test_state_files.py (racing writers and
                      readers, guard scan).
-Commit is CAS        Verify→save runs under ``_ManifestLock`` re-checking
-(exactly one         the planned txn; of N racing writers exactly one
-winner)              commits, losers raise ``ConcurrentWriteError`` and
+Commit is CAS        ``_cas_save`` is the one verify→save: under
+(exactly one         ``_ManifestLock`` it re-checks the planned txn and
+winner)              ``holds()``; of N racing writers exactly one
+                     commits, losers raise ``ConcurrentWriteError`` and
                      roll back ONLY their writer-unique
                      ``v{txn}_{wtoken}`` dirs — a loser can never delete
-                     a winner's data. ``merge_upsert``, ``delete_where``
-                     and ``add_columns`` pass ``expected_txn`` from the
-                     manifest load that planned the write, so a commit
-                     landing after that load fails them too.
+                     a winner's data. Users: ``overwrite_buckets`` and
+                     ``add_columns``' schema save. Every write plans from
+                     one manifest load and CASes against it
+                     (``expected_txn``), so a commit landing after that
+                     load fails it too: ``merge_upsert``,
+                     ``add_columns``, and ``_rewrite_buckets`` — the one
+                     non-MERGE bucket rewrite (read the snapshot's
+                     buckets, row transform, counts as an Observation on
+                     the write)
+                     behind ``delete_where``, ``delete_stale_rows``,
+                     ``cancellation_sweep``, the iCalendar sweep and
+                     ``delete_calendar_cascade``.
                      tests/test_manifest_lock.py::
                      test_steal_storm_mutual_exclusion, tests/
                      test_upsert.py (CAS pins the planning snapshot).
+Bucket routing       The manifest records the routing column at
+has one owner        ``create(part_key=...)`` (absent = the key, so older
+                     manifests route as before); ``Manifest.bucket_col``
+                     (a row's bucket) and ``Manifest.buckets_for`` (the
+                     buckets of driver-side values, or every bucket when
+                     the column is not the routing one) are the only
+                     routing, used by MERGE, ``overwrite_all``,
+                     ``add_columns``, ``_rewrite_buckets`` and the key
+                     reads.
+                     ``merge_upsert`` raises ``ValueError`` when its
+                     spec routes by another column. tests/
+                     test_routing.py.
 Lock steal is        A stealer measures (stat→read→stat, same-incarnation
 identity-verified    check), renames the lock aside, re-verifies the stale
                      content, and restores a fresh lock via ``os.link`` on
@@ -112,11 +133,11 @@ import dataclasses
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from webhookdb_spark.functions.converters import CONV_STR2HASH
+from webhookdb_spark.functions.converters import CONV_STR2HASH, str2inthash_py
 from webhookdb_spark.operators.util import memo_col
 
 PART_COL = "_part"
@@ -372,7 +393,8 @@ class VersionedState:
 
 def bucket_expr(key_col: str, n_buckets: int):
     """pmod(str2inthash(key), n) — reference partition routing
-    (partitionable_mixin.rb:49-54). Memoized: the expression is a pure
+    (partitionable_mixin.rb:49-54); managed tables route through
+    ``Manifest.bucket_col``, never by a column of their own. Memoized: the expression is a pure
     immutable tree of (key_col, n_buckets) and the ingest composites
     rebuild it several times per MERGE cycle (guide §5 driver work)."""
     return memo_col(
@@ -406,6 +428,9 @@ class Manifest:
     # write. int/double/string columns only (JSON-portable ordering).
     zonemap_cols: list[str] | None = None
     zonemaps: dict | None = None  # bucket id -> {col: [min, max]}
+    # bucket routing column, fixed at create(); None (and every manifest
+    # written before the field existed) routes by ``key``
+    part_key: str | None = None
 
     @classmethod
     def load(cls, path: Path) -> "Manifest":
@@ -413,6 +438,59 @@ class Manifest:
 
     def save(self, path: Path) -> None:
         write_atomic(path / "_manifest.json", json.dumps(self.__dict__))
+
+    @property
+    def route_col(self) -> str:
+        return self.part_key or self.key
+
+    def bucket_col(self) -> Column:
+        """The bucket of each row: every write that routes rows to
+        buckets computes ``PART_COL`` with this."""
+        return bucket_expr(self.route_col, self.n_buckets)
+
+    def buckets_for(self, col: str, values) -> list[int] | None:
+        """The buckets that can hold rows whose ``col`` is one of the
+        driver-side ``values``: one per value when ``col`` is the
+        routing column, else None (any bucket may, scan them all)."""
+        if col != self.route_col:
+            return None
+        return sorted({str2inthash_py(str(v)) % self.n_buckets
+                       for v in values})
+
+    def zonemap_candidates(
+        self, col: str, lo, hi, hi_inclusive: bool = True
+    ) -> list[int] | None:
+        """Bucket ids that MAY hold rows with ``col`` in ``[lo, hi]``
+        (``[lo, hi)`` when ``hi_inclusive=False``), by the zone maps.
+        ``None`` = column untracked, caller must scan every bucket.
+        Conservative: buckets without stats are candidates; overlapping
+        ranges are never skipped; an all-NULL bucket (min is NULL) is
+        skipped — no range predicate matches NULL."""
+        if col not in (self.zonemap_cols or []):
+            return None
+        zm = self.zonemaps or {}
+        keep: list[int] = []
+        for b in self.buckets:
+            stats = (zm.get(b) or {}).get(col)
+            if stats is None:
+                keep.append(int(b))
+                continue
+            mn, mx = stats
+            if mn is None:
+                continue
+            # Incomparable stats vs bounds (e.g. a numeric tracked
+            # column probed with string cutoffs) must degrade to "may
+            # hold rows", not raise — pruning is an optimization and
+            # the residual filter keeps results exact either way.
+            try:
+                if mx < lo:
+                    continue
+                if (mn > hi) if hi_inclusive else (mn >= hi):
+                    continue
+            except TypeError:
+                pass
+            keep.append(int(b))
+        return keep
 
 
 class ManagedTable:
@@ -434,9 +512,12 @@ class ManagedTable:
         zorder: tuple[str, ...] | None = None,
         keep_versions: int = 0,
         zonemap_cols: tuple[str, ...] | None = None,
+        part_key: str | None = None,
     ) -> None:
-        """``zorder=(a, b[, c[, d]])`` declares 2-4 integer columns to
-        Morton-sort within every bucket on each write (see
+        """``part_key`` is the column rows are bucketed by (default: the
+        key), fixed for the table's life. ``zorder=(a, b[, c[, d]])``
+        declares 2-4 integer columns to Morton-sort within every bucket
+        on each write (see
         ``overwrite_buckets``); parquet min/max stats per file then
         stay narrow on EVERY listed column, so predicate reads on any
         of the dimensions skip files. 2 columns allow values < 2^31;
@@ -465,6 +546,7 @@ class ManagedTable:
             history=[] if keep_versions else None,
             zonemap_cols=list(zonemap_cols) if zonemap_cols else None,
             zonemaps={} if zonemap_cols else None,
+            part_key=part_key if part_key != key else None,
         ).save(self.path)
 
     def drop(self) -> None:
@@ -503,11 +585,17 @@ class ManagedTable:
                     f"txn {at_txn} is not a retained snapshot (retained: "
                     f"{[s['txn'] for s in m.history or []]} + {m.txn})"
                 )
+        return self._scan(m, buckets)
+
+    def _scan(self, m: Manifest, buckets: list[int] | None = None
+              ) -> DataFrame:
+        """The files snapshot ``m`` names for ``buckets`` (all when
+        None), read with its schema."""
         sel = m.buckets if buckets is None else {
             str(b): m.buckets[str(b)] for b in buckets if str(b) in m.buckets
         }
         paths = [str(self.path / rel) for rel in sel.values()]
-        schema = self.schema()
+        schema = T.StructType.fromJson(json.loads(m.schema_json))
         if not paths:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*paths)
@@ -540,48 +628,16 @@ class ManagedTable:
     def zonemap_candidates(
         self, col: str, lo, hi, hi_inclusive: bool = True
     ) -> list[int] | None:
-        """Bucket ids that MAY hold rows with ``col`` in ``[lo, hi]``
-        (``[lo, hi)`` when ``hi_inclusive=False``), by the manifest's
-        zone maps. ``None`` = column untracked, caller must scan every
-        bucket. Conservative: buckets without stats are candidates;
-        overlapping ranges are never skipped; an all-NULL bucket
-        (min is NULL) is skipped — no range predicate matches NULL."""
-        m = self.manifest
-        tracked = getattr(m, "zonemap_cols", None) or []
-        if col not in tracked:
-            return None
-        zm = getattr(m, "zonemaps", None) or {}
-        keep: list[int] = []
-        for b in m.buckets:
-            stats = (zm.get(b) or {}).get(col)
-            if stats is None:
-                keep.append(int(b))
-                continue
-            mn, mx = stats
-            if mn is None:
-                continue
-            # Incomparable stats vs bounds (e.g. a numeric tracked
-            # column probed with string cutoffs) must degrade to "may
-            # hold rows", not raise — pruning is an optimization and
-            # the residual filter keeps results exact either way.
-            try:
-                if mx < lo:
-                    continue
-                if (mn > hi) if hi_inclusive else (mn >= hi):
-                    continue
-            except TypeError:
-                pass
-            keep.append(int(b))
-        return keep
+        """:meth:`Manifest.zonemap_candidates` of the current snapshot."""
+        return self.manifest.zonemap_candidates(col, lo, hi, hi_inclusive)
 
     def read_for_key(self, key_value: str) -> DataFrame:
         """Key-routing read: prune to the single bucket owning the key
-        (partitionable_mixin.rb:49-54 parity)."""
-        from webhookdb_spark.functions.converters import str2inthash_py
-
+        (partitionable_mixin.rb:49-54 parity) when the table routes by
+        its key; a table routed by another column scans every bucket."""
         m = self.manifest
-        b = str2inthash_py(str(key_value)) % m.n_buckets
-        return self.read(buckets=[b]).where(F.col(m.key) == F.lit(key_value))
+        return self._scan(m, m.buckets_for(m.key, [key_value])).where(
+            F.col(m.key) == F.lit(key_value))
 
     def read_for_keys(self, key_values: list[str]) -> DataFrame:
         """IN-list key routing: prune to the union of the buckets
@@ -589,14 +645,10 @@ class ManagedTable:
         4096-bucket table opens at most 1000 bucket dirs, not the
         table — then the residual isin filter pushes into those
         scans."""
-        from webhookdb_spark.functions.converters import str2inthash_py
-
         m = self.manifest
         vals = [str(v) for v in key_values]
-        if not vals:
-            return self.read(buckets=[])
-        bs = sorted({str2inthash_py(v) % m.n_buckets for v in vals})
-        return self.read(buckets=bs).where(F.col(m.key).isin(vals))
+        return self._scan(m, m.buckets_for(m.key, vals)).where(
+            F.col(m.key).isin(vals))
 
     # -- write -------------------------------------------------------------
     def overwrite_buckets(
@@ -672,11 +724,9 @@ class ManagedTable:
         zm_cols = getattr(m, "zonemap_cols", None) if buckets else None
         zm_obs = None
         if zm_cols:
-            from pyspark.sql import Observation
-
             # A discarded sentinel row keeps the observed plan non-empty
             # when every listed bucket is rewritten empty — the same
-            # guard as delete_where's: empty-relation propagation could
+            # guard as _rewrite_buckets': empty-relation propagation could
             # otherwise drop the CollectMetrics node and zm_obs.get
             # would fail.
             out = out.unionByName(self._sentinel(out.schema, DISCARD_PART))
@@ -793,29 +843,11 @@ class ManagedTable:
         referenced = set(new_buckets.values())
         for snap in new_history:
             referenced.update(snap["buckets"].values())
-        # Commit = compare-and-swap under the manifest lock: re-verify
-        # the planned txn and save atomically, so of two racing writers
-        # exactly one commits and the loser rolls back only its own
-        # writer-unique dirs.
-        with _ManifestLock(self.path) as lk:
-            current = Manifest.load(self.path)
-            if current.txn != m.txn:
-                _abort(
-                    f"manifest advanced txn {m.txn} -> {current.txn} "
-                    "during write; reload and retry"
-                )
-            if not lk.holds():
-                # Our lock was stolen (we stalled past stale_after and
-                # another writer broke it) — committing now could race
-                # the thief's own verify→save window. Abort and retry.
-                _abort(
-                    "manifest lock stolen during commit (holder stalled "
-                    "past stale_after); reload and retry"
-                )
+        try:
             # dataclasses.replace carries EVERY manifest field (zorder,
             # zonemap declarations, ...) — a hand-listed constructor
             # here once silently dropped new fields on rewrite
-            dataclasses.replace(
+            self._cas_save(m, dataclasses.replace(
                 m,
                 txn=txn,
                 buckets=new_buckets,
@@ -823,7 +855,9 @@ class ManagedTable:
                 history=new_history if keep else m.history,
                 zonemaps=new_zonemaps if zm_cols else getattr(
                     m, "zonemaps", None),
-            ).save(self.path)
+            ))
+        except ConcurrentWriteError as e:
+            _abort(str(e))
         if capture_changes:
             src = staging / f"{PART_COL}={CHANGES_PART}"
             dst = self.path / "_changes" / f"txn_{txn}"
@@ -842,6 +876,28 @@ class ManagedTable:
                     shutil.rmtree(self.path / rel, ignore_errors=True)
         return txn, {str(b): new_buckets[str(b)] for b in buckets}
 
+    def _cas_save(self, planned: Manifest, new: Manifest) -> None:
+        """Commit = compare-and-swap under the manifest lock: save
+        ``new`` only if the manifest is still at ``planned.txn`` and the
+        lock is still ours, else raise :class:`ConcurrentWriteError`.
+        Of N racing writers exactly one commits. A writer whose lock was
+        stolen (it stalled past stale_after and another writer broke
+        it) must not commit: that could race the thief's own
+        verify→save window."""
+        with _ManifestLock(self.path) as lk:
+            current = Manifest.load(self.path)
+            if current.txn != planned.txn:
+                raise ConcurrentWriteError(
+                    f"manifest advanced txn {planned.txn} -> {current.txn} "
+                    "during write; reload and retry"
+                )
+            if not lk.holds():
+                raise ConcurrentWriteError(
+                    "manifest lock stolen during commit (holder stalled "
+                    "past stale_after); reload and retry"
+                )
+            new.save(self.path)
+
     def _sentinel(self, schema: T.StructType, part: int) -> DataFrame:
         """One all-NULL row of ``schema`` routed to reserved partition
         ``part``."""
@@ -855,75 +911,88 @@ class ManagedTable:
                       expected_txn: int | None = None) -> None:
         m = self.manifest
         if PART_COL not in df.columns:
-            df = df.withColumn(PART_COL, bucket_expr(m.key, m.n_buckets))
+            df = df.withColumn(PART_COL, m.bucket_col())
         self.overwrite_buckets(df, list(range(m.n_buckets)),
                                expected_txn=expected_txn)
 
-    def delete_where(
+    def _rewrite_buckets(
         self,
-        condition,
-        buckets: list[int] | None = None,
-        part_key: str | None = None,
-    ) -> int:
-        """Predicate delete (the Delta ``DELETE WHERE`` analog): rewrite
-        only the affected buckets without the matching rows. Returns the
-        number of rows deleted.
+        buckets=None,
+        transform=None,
+        keep: Column | None = None,
+        counts: dict[str, Column] | None = None,
+    ) -> dict[str, int]:
+        """The one bucket rewrite that is not a MERGE (deletes, sweeps,
+        retention): load ONE manifest snapshot, read ``buckets`` from it
+        (all when None; a callable gets the snapshot and returns the
+        list or None), apply ``transform`` (df → df; columns beyond the
+        schema are dropped), keep the rows where ``keep`` is true, route
+        them with :meth:`Manifest.bucket_col` and commit with a CAS
+        against that snapshot. ``counts`` ({name: aggregate Column} over
+        the transformed rows, before ``keep``) ride the write as one
+        Observation; returns them, all 0 when no listed bucket holds
+        data (nothing is written then).
 
-        Pass ``buckets`` (or derive them from a routing key upstream) to
-        prune the rewrite — the reference's partition-key routing trick
-        (partitionable_mixin.rb:49-54) that keeps a keyed delete from
-        touching the whole table. ``part_key`` overrides the column the
-        bucket hash is computed from (hash-partitioned tables bucket by
-        the partition source, not the remote key).
-        """
-        from pyspark.sql import Observation
-
+        A zero-change rewrite still swaps in identical data for the
+        listed buckets: the counts are known only once the write ran,
+        and one bounded write beats separate count jobs on every real
+        change."""
         m = self.manifest
-        affected = buckets if buckets is not None else list(range(m.n_buckets))
-        # No data in any affected bucket → nothing to delete. (Also
-        # required for correctness of the Observation below: an empty
-        # table reads as a local relation whose CollectMetrics node
-        # Catalyst folds away, so the metric would never materialize.)
+        if callable(buckets):
+            buckets = buckets(m)
+        affected = list(range(m.n_buckets)) if buckets is None else buckets
+        counts = counts or {}
+        # No data in any affected bucket → nothing to rewrite. (Also
+        # required for the Observation below: an empty table reads as a
+        # local relation whose CollectMetrics node Catalyst folds away,
+        # so the metric would never materialize.)
         if not any(str(b) in m.buckets for b in affected):
-            return 0
-        df = self.read(buckets=affected).withColumn(
-            PART_COL, bucket_expr(part_key or m.key, m.n_buckets)
-        )
-        # Single pass: the deleted count rides the rewrite as an
-        # Observation (same trick merge_upsert uses for its action
-        # counts) instead of two count() actions that materialize the
-        # buckets twice. A zero-match delete still swaps in identical
-        # data for the affected buckets — callers prune via ``buckets``,
-        # so that write is bounded by the routing, and one bounded write
-        # beats two full counts on every real delete.
+            return dict.fromkeys(counts, 0)
+        df = self._scan(m, affected)
+        if transform is not None:
+            df = transform(df)
         obs = Observation()
-        observed = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("before"),
-            # mirror where(~condition) exactly: a NULL condition drops
-            # the row, so it must count as deleted
-            F.sum(F.when(~condition, 0).otherwise(1)).alias("deleted"),
-        )
-        # The always-false nondeterministic disjunct changes nothing per
-        # row but blocks constant folding: a literal condition (e.g.
-        # lit(True) for a full wipe) would otherwise fold the filter and
-        # prune the CollectMetrics branch at optimization time.
-        never = F.monotonically_increasing_id() < F.lit(-1)
-        remaining = observed.where(~condition | never)
-        # When the delete empties every affected bucket, AQE's
+        df = df.observe(obs, F.count(F.lit(1)).alias("_rows"),
+                        *[c.alias(n) for n, c in counts.items()])
+        if keep is not None:
+            # The always-false nondeterministic disjunct changes nothing
+            # per row but blocks constant folding: a literal predicate
+            # (e.g. a full wipe) would otherwise fold the filter and
+            # prune the CollectMetrics branch at optimization time.
+            df = df.where(keep | (F.monotonically_increasing_id() < F.lit(-1)))
+        # When the rewrite empties every affected bucket, AQE's
         # empty-relation propagation replaces the map-stage subtree —
         # CollectMetrics included — with an empty LocalRelation, and the
         # observation never materializes (obs.get then dies in toPyRow
-        # on Row.empty). A sentinel row routed to DISCARD_PART keeps
-        # the written plan non-empty; overwrite_buckets only promotes
-        # dirs for the listed buckets, so the sentinel's staging dir is
+        # on Row.empty). A sentinel row routed to DISCARD_PART keeps the
+        # written plan non-empty; overwrite_buckets only promotes dirs
+        # for the listed buckets, so the sentinel's staging dir is
         # discarded with the staging area.
-        fields = self.schema()
-        to_write = remaining.select(
-            *[f.name for f in fields], PART_COL
+        fields = T.StructType.fromJson(json.loads(m.schema_json))
+        out = df.select(
+            *[f.name for f in fields], m.bucket_col().alias(PART_COL)
         ).unionByName(self._sentinel(fields, DISCARD_PART))
-        self.overwrite_buckets(to_write, affected, expected_txn=m.txn)
-        return int(obs.get["deleted"] or 0)
+        self.overwrite_buckets(out, affected, expected_txn=m.txn)
+        got = obs.get
+        return {n: int(got[n] or 0) for n in counts}
+
+    def delete_where(self, condition: Column, buckets=None) -> int:
+        """Predicate delete (the Delta ``DELETE WHERE`` analog): rewrite
+        only the affected buckets without the rows where ``condition``
+        is true or NULL. Returns the number of rows deleted.
+
+        Pass ``buckets`` (a list, or a callable of the snapshot such as
+        ``lambda m: m.buckets_for(col, values)``) to prune the rewrite —
+        the reference's partition-key routing trick
+        (partitionable_mixin.rb:49-54) that keeps a keyed delete from
+        touching the whole table.
+        """
+        return self._rewrite_buckets(
+            buckets, keep=~condition,
+            # mirror where(~condition) exactly: a NULL condition drops
+            # the row, so it must count as deleted
+            counts={"deleted": F.sum(F.when(~condition, 0).otherwise(1))},
+        )["deleted"]
 
     # -- schema evolution (additive only, base.rb:557-631) -----------------
     def add_columns(self, new_fields: list[T.StructField], backfill: dict | None = None) -> None:
@@ -959,11 +1028,7 @@ class ManagedTable:
         ]
         if not add and not redo:
             return
-        paths = [str(self.path / rel) for rel in m.buckets.values()]
-        base = (
-            self.spark.read.schema(schema).parquet(*paths)
-            if paths else self.spark.createDataFrame([], schema)
-        )
+        base = self._scan(m)
         if not add:
             # Redo-only retry (r14 ADVICE): a routine idempotent
             # ensure-columns call that passes a backfill expression for
@@ -978,7 +1043,7 @@ class ManagedTable:
                 has_null = c if has_null is None else (has_null | c)
             if not base.where(has_null).limit(1).take(1):
                 return
-        df = base.withColumn(PART_COL, bucket_expr(m.key, m.n_buckets))
+        df = base.withColumn(PART_COL, m.bucket_col())
         for fld in add:
             expr = (backfill or {}).get(fld.name)
             df = df.withColumn(
@@ -999,33 +1064,17 @@ class ManagedTable:
             + [f for f in schema.fields if f.name == "data"]
         )
         if add:
-            # Schema save goes through the SAME lock + CAS as every
-            # other manifest write (r13 code review): an unguarded save
-            # here could clobber a concurrent MERGE's committed
-            # manifest with this pre-merge buckets map, silently
-            # rolling the table back. The CAS baseline is THE snapshot
-            # the read above derives from.
-            with _ManifestLock(self.path) as lk:
-                current = Manifest.load(self.path)
-                if current.txn != m.txn:
-                    raise ConcurrentWriteError(
-                        f"manifest advanced txn {m.txn} -> {current.txn} "
-                        "during schema evolution; reload and retry"
-                    )
-                if not lk.holds():
-                    raise ConcurrentWriteError(
-                        "manifest lock stolen during schema evolution; "
-                        "reload and retry"
-                    )
-                # replace() carries every manifest field (zorder, zone
-                # maps, retention) through the schema evolution; txn
-                # bumps so concurrent writers planning from the old
-                # schema lose their CAS instead of committing rows
-                # missing the columns
-                dataclasses.replace(
-                    current, txn=current.txn + 1,
-                    schema_json=new_schema.json(),
-                ).save(self.path)
+            # Schema save goes through the SAME CAS as every other
+            # manifest write (r13 code review): an unguarded save here
+            # could clobber a concurrent MERGE's committed manifest with
+            # this pre-merge buckets map, silently rolling the table
+            # back. The CAS baseline is THE snapshot the read above
+            # derives from. replace() carries every manifest field
+            # (zorder, zone maps, retention, routing); txn bumps so
+            # concurrent writers planning from the old schema lose their
+            # CAS instead of committing rows missing the columns.
+            self._cas_save(m, dataclasses.replace(
+                m, txn=m.txn + 1, schema_json=new_schema.json()))
         # Pin the rewrite to the txn the schema save just produced (or,
         # on a redo-only retry, to the snapshot read above): a commit
         # sneaking in between would otherwise be replayed over from the
