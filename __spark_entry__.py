@@ -6477,10 +6477,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # put here). Prune entries once a fresh full-green row lands on the
 # tracked record.
 _ROTATION_PRIORITY: list[str] = [
-    # (r16 start) All 34 r15 entries pruned: every one got a fully-green
-    # r15 driver row (CORRECTNESS_r15.json), so the staleness sort alone
-    # now orders them correctly. Entries return here when this round's
-    # optimization drift unvouches queries the sweeps have re-verified.
+    # Code-changed re-checks: each of these 14 has a green r16 driver row,
+    # but the code under its closure changed after the round-close tree
+    # f44313f that row ran, so tools/retro_vouch_audit.py names it stale
+    # and the fingerprint record holds it unvouched. An entry is pruned
+    # once a fresh all-green driver row lands for it.
+    "corpus_release_report",
+    "decontaminate",
+    "dedup_minhash",
+    "dedup_ngram",
+    "search_bm25",
+    "text_langid",
+    "text_lm_score",
+    "text_quality",
+    "text_repetition",
+    "text_scrub_pii",
+    "text_token_count",
+    "text_token_count_bpe",
+    "text_token_count_bpe2",
+    "text_winnow",
 ]
 
 _ROTATION_RECORD: dict[str, int] | None = None

@@ -7,6 +7,7 @@ The str2inthash vectors are the reference's own cross-language test corpus
 from __future__ import annotations
 
 import json
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -16,7 +17,16 @@ from webhookdb_spark.functions import converters as C
 
 VECTORS_PATH = "/root/reference/spec/data/str2hashconv_spec.json"
 
+# The vectors are the reference's corpus, not ours: regenerating them from
+# str2inthash_py would check the code against itself, so these tests run
+# only where the corpus itself is present.
+needs_vectors = pytest.mark.skipif(
+    not Path(VECTORS_PATH).exists(),
+    reason="reference str2hashconv corpus not available",
+)
 
+
+@needs_vectors
 def test_str2inthash_python_matches_reference_vectors():
     vectors = json.load(open(VECTORS_PATH))
     assert len(vectors) > 2000
@@ -24,6 +34,7 @@ def test_str2inthash_python_matches_reference_vectors():
         assert C.str2inthash_py(v["input"]) == v["output"], v
 
 
+@needs_vectors
 def test_str2inthash_spark_matches_reference_vectors(spark):
     vectors = json.load(open(VECTORS_PATH))
     df = spark.createDataFrame(
@@ -37,6 +48,7 @@ def test_str2inthash_spark_matches_reference_vectors(spark):
     assert bad == 0
 
 
+@needs_vectors
 def test_str2inthash_sql_matches_reference_vectors():
     vectors = json.load(open(VECTORS_PATH))
     con = duckdb.connect()

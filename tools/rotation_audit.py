@@ -32,6 +32,10 @@ The driver checks roughly the FIRST 50 ``queries()`` entries per round
    committing the driver's CORRECTNESS record and before touching any
    code (that is what makes "newest row ⇒ ran the current code"
    sound): ``python tools/rotation_audit.py --update [--unvouch q…]``.
+   Regenerated LATE (code already edited since the round-close
+   commit), ``--update`` alone vouches the new rows for code they never
+   ran: follow it with ``python tools/retro_vouch_audit.py`` and re-run
+   ``--update --unvouch`` on exactly the queries it names.
 
 Only GIT-TRACKED correctness files count: the driver writes
 CORRECTNESS_r{N}.json AFTER the builder's last commit, so keying on
@@ -354,7 +358,9 @@ def audit() -> list[str]:
                     problems.append(
                         f"FP-REFRESH {q}: driver re-checked in r{rnd} after "
                         f"the fingerprint record (r{stored_at}) — regenerate "
-                        "(python tools/rotation_audit.py --update)"
+                        "(python tools/rotation_audit.py --update), then run "
+                        "python tools/retro_vouch_audit.py and pass every "
+                        "query it names to --update --unvouch"
                     )
                 else:
                     # code changed since the round that vouched for it
