@@ -320,6 +320,45 @@ def test_http_parallel_sync_min_prefix_watermark(spark, tmp_warehouse):
     assert tgt2.state.load()["last_synced_at"] == "2024-01-02T00:00:00"
 
 
+def test_http_parallel_sync_streams_its_window(spark, tmp_warehouse,
+                                               monkeypatch):
+    """run_sync_parallel holds at most ``parallelism`` pages: when the
+    first POST is made, at most ``parallelism + 1`` of the window's N
+    partitions (one page each) have been fetched, not all N."""
+    import webhookdb_spark.sinks.sync_target as sync_mod
+
+    n_parts, page, parallelism = 12, 3, 2
+    acc = spark.sparkContext.accumulator(0)
+
+    def first_row_of_partition(i):
+        if i % page == 0:
+            acc.add(1)
+        return True
+
+    fetched = F.udf(first_row_of_partition, "boolean").asNondeterministic()
+    # range-partitioned by ts, so the export's orderBy adds no exchange
+    # and each of its output partitions is one page
+    df = spark.range(n_parts * page).select(
+        F.timestamp_seconds("id").alias("ts"), "id"
+    ).repartitionByRange(n_parts, "ts")
+    real = sync_mod.dataset_to_sync
+    # count each partition of the ordered export as it is computed
+    monkeypatch.setattr(sync_mod, "dataset_to_sync",
+                        lambda *a: real(*a).where(fetched("id")))
+    at_first_post = []
+
+    def post(rows, now):
+        if not at_first_post:
+            at_first_post.append(acc.value)
+
+    tgt = HttpSyncTarget(state=SyncState(tmp_warehouse / "st.json"),
+                         ts_col="ts", post=post, page_size=page)
+    assert tgt.run_sync_parallel(df, "2030-01-01 00:00:00",
+                                 parallelism=parallelism) == n_parts * page
+    assert acc.value == n_parts
+    assert at_first_post[0] <= parallelism + 1
+
+
 def test_snowflake_sync_stage_put_merge(spark, tmp_warehouse):
     """Stage → PUT → MERGE statement shape (snowflake.rb:81-125):
     quote-enclosed CSV stage, one PUT per part file, positional $n

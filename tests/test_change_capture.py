@@ -186,21 +186,76 @@ def test_changes_since_txn_from_nested_file(spark, tmp_warehouse):
     assert got == {("k0", t1), ("k1", t1), ("k2", t1), ("k9", t2)}
 
 
+class _FeedConsumer:
+    """One consumer of a FAKE_V1 table's change feed — a DB sync, an
+    HTTP sync (both trim after the commit) or an IVM maintainer — as
+    ``run(table, now)``, its committed ``watermark()`` and the keys it
+    has ``delivered()`` so far."""
+
+    def __init__(self, spark, kind, d):
+        from webhookdb_spark.operators.matview import IncrementalAggMaintainer
+        from webhookdb_spark.sinks.sync_target import (
+            DatabaseSyncTarget,
+            HttpSyncTarget,
+            SyncState,
+        )
+
+        self.spark, self.kind, self.d = spark, kind, d
+        state = SyncState(d / f"{kind}_st.json")
+        if kind == "db":
+            self.tgt = DatabaseSyncTarget(
+                state=state, ts_col="at", key_col="my_id",
+                dest_path=d / "replica",
+            )
+        elif kind == "http":
+            self.posted: list[str] = []
+            self.tgt = HttpSyncTarget(
+                state=state, ts_col="at", page_size=3,
+                post=lambda rows, now: self.posted.extend(
+                    r["my_id"] for r in rows),
+            )
+        else:
+            self.ivm = IncrementalAggMaintainer(
+                spark, str(d / "ivm"), "my_id", "g", "v",
+                project=lambda df: df.select(
+                    "my_id", F.lit("g").alias("g"), F.lit(1).alias("v")),
+            )
+
+    def run(self, t, now):
+        if self.kind == "ivm":
+            return self.ivm.run(t)
+        return self.tgt.run_sync_changes(t, now)
+
+    def watermark(self):
+        if self.kind == "ivm":
+            return self.ivm.watermark
+        return int(self.tgt.state.load().get("last_synced_txn", 0))
+
+    def delivered(self):
+        if self.kind == "http":
+            return sorted(self.posted)
+        if self.kind == "ivm":
+            return sorted(r.key for r in self.ivm.state().collect())
+        replica = self.spark.read.parquet(str(self.d / "replica"))
+        return sorted(r.my_id for r in replica.collect())
+
+
+@pytest.mark.parametrize("consumer", ["db", "http", "ivm"])
 def test_db_sync_window_ends_at_listed_txn(spark, tmp_warehouse,
-                                            monkeypatch):
-    """run_sync_changes syncs exactly the txns it listed: a txn that
-    commits between the listing and the window read is delivered by the
-    next cycle, once, instead of riding this cycle under a watermark
-    that does not cover it and being delivered again."""
+                                            monkeypatch, consumer):
+    """Every change-feed consumer reads exactly the txns it listed: a
+    txn that commits between the listing and the window read is
+    delivered by the next cycle, once, instead of riding this cycle
+    under a watermark that does not cover it and being delivered again
+    (or trimmed unread)."""
     import webhookdb_spark.operators.upsert as upsert_mod
-    from webhookdb_spark.sinks.sync_target import DatabaseSyncTarget, SyncState
 
     t = _table(spark, tmp_warehouse)
     _preload(spark, t, n=4)
-    tgt = DatabaseSyncTarget(
-        state=SyncState(tmp_warehouse / "db_st.json"),
-        ts_col="at", key_col="my_id", dest_path=tmp_warehouse / "replica",
-    )
+    t1 = t.manifest.txn
+    c = _FeedConsumer(spark, consumer, tmp_warehouse)
+    # rows synced per cycle; IVM counts the txns it applied
+    first, late_n = (1, 1) if consumer == "ivm" else (4, 2)
     real = upsert_mod.changes_since
     late = []
 
@@ -213,14 +268,38 @@ def test_db_sync_window_ends_at_listed_txn(spark, tmp_warehouse,
 
     monkeypatch.setattr(upsert_mod, "changes_since",
                         changes_since_after_a_commit)
-    assert tgt.run_sync_changes(t, "2024-01-06 00:00:00") == 4
+    assert c.run(t, "2024-01-06 00:00:00") == first
     monkeypatch.undo()
-    assert change_txns(t) == [t.manifest.txn]  # the late txn is kept
-    assert tgt.run_sync_changes(t, "2024-01-07 00:00:00") == 2
-    assert tgt.run_sync_changes(t, "2024-01-08 00:00:00") == 0
-    replica = spark.read.parquet(str(tmp_warehouse / "replica"))
-    assert sorted(r.my_id for r in replica.collect()) == [
-        "k0", "k1", "k2", "k3", "n1", "n2"]
+    assert c.watermark() == t1
+    kept = [t.manifest.txn] if consumer != "ivm" else [t1, t.manifest.txn]
+    assert change_txns(t) == kept  # the late txn is kept
+    assert c.run(t, "2024-01-07 00:00:00") == late_n
+    assert c.run(t, "2024-01-08 00:00:00") == 0
+    assert c.watermark() == t.manifest.txn
+    assert c.delivered() == ["k0", "k1", "k2", "k3", "n1", "n2"]
+
+
+@pytest.mark.parametrize("consumer", ["db", "http", "ivm"])
+def test_feed_window_ending_in_empty_change_set(spark, tmp_warehouse,
+                                                consumer):
+    """A window whose txns hold only empty change sets (an all-stale
+    MERGE) still moves each consumer's watermark to the listed end, and
+    a sync's trim removes those dirs instead of re-reading them every
+    cycle."""
+    t = _table(spark, tmp_warehouse)
+    _preload(spark, t, n=4)
+    c = _FeedConsumer(spark, consumer, tmp_warehouse)
+    c.run(t, "2024-01-06 00:00:00")
+    upsert_envelopes(t, _env(spark, [("k1", "2023-01-01T00:00:00Z")]),
+                     FAKE_V1)  # stale: an empty change set
+    stale_txn = t.manifest.txn
+    assert change_txns(t)[-1] == stale_txn
+    assert c.run(t, "2024-01-07 00:00:00") == (
+        1 if consumer == "ivm" else 0)
+    assert c.watermark() == stale_txn
+    if consumer != "ivm":  # the syncs trim; IVM leaves the feed alone
+        assert change_txns(t) == []
+    assert c.delivered() == ["k0", "k1", "k2", "k3"]
 
 
 def _wire_envelopes(spark, rows):

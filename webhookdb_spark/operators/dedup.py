@@ -637,7 +637,6 @@ def bloom_decontaminate(
     ngram_n: int = 5,
     n_bits: int = 1 << 16,
     k: int = 3,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Decontamination at the scale where even the benchmark gram set
     outgrows a broadcast join: compress the eval set to an ``n_bits``
@@ -656,45 +655,17 @@ def bloom_decontaminate(
 
     Output: ``(doc_id, n_flagged_ngrams, n_ngrams, flagged)``.
 
-    ``use_kernel=True`` (default) runs the probe in an Arrow-batched
-    kernel (:func:`_bloom_probe_kernel`) — still a narrow zero-join
-    map, hash-identical to the expression path, which remains
-    available (``use_kernel=False``) for pure-expression environments.
+    The probe runs in an Arrow-batched kernel
+    (:func:`_bloom_probe_kernel`), hash-identical to the DuckDB twin
+    :func:`sql_bloom_decontaminate`.
     """
     words = bloom_bitmap(eval_df, text_col, ngram_n, n_bits, k)
-    if use_kernel:
-        tg = shingle_sets(train, text_col, ngram_n).select(
-            F.col(id_col).alias("doc_id"), "_sh"
-        )
-        return tg.mapInPandas(
-            _bloom_probe_kernel(words, n_bits, k),
-            "doc_id long, n_flagged_ngrams int, n_ngrams int, flagged boolean",
-        )
-    from webhookdb_spark.operators.util import lit_longs
-
-    words_lit = lit_longs(words)
-
-    def bit_set(p: Column) -> Column:
-        word = F.element_at(words_lit, F.floor(p / 32).cast("int") + 1)
-        return (
-            F.floor(word / F.pow(F.lit(2.0), (p % 32).cast("int"))).cast("long")
-            % 2
-            == 1
-        )
-
-    def gram_hit(g: Column) -> Column:
-        return F.forall(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: bit_set(_bloom_pos(i, g, n_bits)),
-        )
-
-    tg = shingle_sets(train, text_col, ngram_n)
-    b = bind(tg, "_nhit", F.size(F.filter(F.col("_sh"), gram_hit)))
-    return b.select(
-        F.col(id_col).alias("doc_id"),
-        F.col("_nhit").cast("int").alias("n_flagged_ngrams"),
-        F.size("_sh").cast("int").alias("n_ngrams"),
-        (F.col("_nhit") > 0).alias("flagged"),
+    tg = shingle_sets(train, text_col, ngram_n).select(
+        F.col(id_col).alias("doc_id"), "_sh"
+    )
+    return tg.mapInPandas(
+        _bloom_probe_kernel(words, n_bits, k),
+        "doc_id long, n_flagged_ngrams int, n_ngrams int, flagged boolean",
     )
 
 

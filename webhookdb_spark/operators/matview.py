@@ -76,23 +76,15 @@ class IncrementalAggMaintainer(VersionedState):
 
     def run(self, table) -> int:
         """Fold new feed transactions; returns how many were applied."""
-        from webhookdb_spark.operators.upsert import (
-            change_txns,
-            changes_since,
-            latest_change_per_key,
-        )
+        from webhookdb_spark.operators.upsert import feed_window
 
         m = self._meta()
-        since = int(m["watermark"])
-        txns = [t for t in change_txns(table) if t > since]
-        if not txns:
+        window = feed_window(table, int(m["watermark"]))
+        if window is None:
             return 0
-        new_wm = max(txns)
-
-        window = changes_since(table, since, new_wm)
         # Replace semantics: only each key's LAST post-image in the
         # window contributes; intermediate states cancel exactly.
-        compacted = latest_change_per_key(window, table.manifest.key)
+        new_wm, compacted, n_txns = window
         if self.project is not None:
             compacted = self.project(compacted)
         # The per-cycle expression trees below are pure functions of the
@@ -205,4 +197,4 @@ class IncrementalAggMaintainer(VersionedState):
 
         _release_local_checkpoint(fresh)
         self._commit(new_wm, m["current"])
-        return len(txns)
+        return n_txns

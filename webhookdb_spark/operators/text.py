@@ -578,7 +578,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Rolling-hash document fingerprinting by winnowing (the
     MOSS/local-minima scheme): hash every ``k``-char gram of the
@@ -589,36 +588,15 @@ def winnow_fingerprints(
     that whole-document md5 (:func:`fingerprint`) cannot provide.
 
     Hashes are md5-prefix 28-bit ints (engine-portable, like the
-    sampling buckets). Normalization stays a native Column expression
-    in both paths (identical bytes reach the hash). ``use_kernel=True``
-    (default) computes grams/mins in the Arrow-batched kernel — narrow,
-    no shuffle, hash-identical to the expression path, which remains
-    available (``use_kernel=False``) for pure-expression environments
-    or non-bigint id columns."""
+    sampling buckets). Normalization is a native Column expression;
+    grams and window minima are computed in the Arrow-batched kernel
+    (narrow, no shuffle), hash-identical to the DuckDB twin
+    :func:`sql_winnow_fingerprints`."""
     norm = ascii_lower(F.regexp_replace(F.trim(F.col(text_col)), WS, " "))
-    if use_kernel:
-        b = scale_out(df.select("doc_id", text_col)).select(
-            "doc_id", norm.alias("_n")
-        )
-        return b.mapInPandas(_winnow_kernel(k, w), "doc_id long, fp long")
-    b = bind(scale_out(df.select("doc_id", text_col)), "_n", norm)
-    n = F.col("_n")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(n) - (k - 1), F.lit(1))),
-        lambda i: F.substring(n, i, k),
+    b = scale_out(df.select("doc_id", text_col)).select(
+        "doc_id", norm.alias("_n")
     )
-    b = bind(b, "_h", F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(g), 1, 7), 16, 10).cast("long"),
-    ))
-    h = F.col("_h")
-    mins = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(h) - (w - 1), F.lit(1))),
-        lambda j: F.array_min(F.slice(h, j, w)),
-    )
-    return b.select(
-        "doc_id", F.explode(F.array_distinct(mins)).alias("fp")
-    )
+    return b.mapInPandas(_winnow_kernel(k, w), "doc_id long, fp long")
 
 
 def sql_winnow_fingerprints(

@@ -684,6 +684,30 @@ def changes_since(
     )
 
 
+def feed_window(
+    table: ManagedTable, since_txn: int
+) -> tuple[int, DataFrame, int] | None:
+    """The one window every change-feed consumer reads: list the txn
+    dirs once and fix the window's end at the highest listed txn past
+    ``since_txn``, before any row is read (the offset-log rule of
+    Structured Streaming). Returns ``(end_txn, rows, n_txns)``: one
+    post-image per key of ``(since_txn, end_txn]``
+    (:func:`latest_change_per_key`, with ``_action`` and ``_txn``) and
+    how many txns the window spans; None when no txn is listed.
+
+    A consumer that commits ``end_txn`` as its watermark covers exactly
+    what it read: a txn that commits after the listing is left whole
+    for the next cycle, and a window of empty change sets (an all-stale
+    MERGE) still moves the watermark past them."""
+    txns = [t for t in change_txns(table) if t > since_txn]
+    if not txns:
+        return None
+    end_txn = txns[-1]
+    rows = latest_change_per_key(
+        changes_since(table, since_txn, end_txn), table.manifest.key)
+    return end_txn, rows, len(txns)
+
+
 def latest_change_per_key(changes: DataFrame, key: str) -> DataFrame:
     """Compact a :func:`changes_since` window to one row per key (the
     highest-txn post-image) — what a warehouse MERGE consumer wants.

@@ -77,21 +77,6 @@ def lit_doubles(vals) -> Column:
     return F.expr(sql_doubles(vals))
 
 
-def lit_longs(vals) -> Column:
-    """A (possibly nested) list of ints as ONE array<bigint> literal —
-    the integer twin of :func:`lit_doubles` (a 2^16-bit bloom bitmap
-    is 2048 words, i.e. 2048 py4j round-trips as per-element lits)."""
-
-    def render(v) -> str:
-        if isinstance(v, (list, tuple)):
-            if not v:
-                raise ValueError("lit_longs: empty array level")
-            return "array(" + ",".join(render(x) for x in v) + ")"
-        return f"{int(v)}L"
-
-    return F.expr(render(vals))
-
-
 def sql_str_lit(x) -> str:
     """Render a Python string as a SQL string literal, escaping embedded
     single quotes (the only metacharacter inside a standard literal).

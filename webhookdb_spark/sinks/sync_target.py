@@ -15,9 +15,19 @@ Reference (lib/webhookdb/sync_target.rb):
   minute, enqueue targets whose period has elapsed.
 
 Spark shape: the export query is a timestamp-range filter + orderBy —
-partition-prunable when the table is date-partitioned; pages stream to
-the sink via ``toLocalIterator`` so the driver holds one page, not the
-result set.
+partition-prunable when the table is date-partitioned. Every HTTP
+routine cuts pages from one ``toLocalIterator`` stream and sends them
+through one loop that keeps at most ``parallelism`` pages in flight (1
+for the serial routines), so that many pages sit in memory, not the
+result set, and commits the longest delivered prefix after each page.
+
+Change-feed consumers (``run_sync_changes`` here, IVM in
+operators/matview.py) read their window from
+``operators.upsert.feed_window``, whose end is fixed by one txn-dir
+listing; the watermark ends there once the window is delivered.
+Trim contract: ``run_sync_changes(trim=True)`` deletes change dirs that
+every other consumer of the same feed (IVM, SCD2) also reads, so trim
+only after those consumers have run.
 """
 
 from __future__ import annotations
@@ -25,7 +35,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Callable, Sequence
+from collections import deque
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 from pathlib import Path
@@ -185,6 +197,12 @@ class SyncState:
         state["stats"] = state.get("stats", [])[-self.max_stats :]
         write_atomic(self.path, json.dumps(state))
 
+    def record(self, state: dict, synced: int, at: str) -> None:
+        """Append a finished cycle's ``{"synced", "at"}`` stats record
+        to ``state`` and save it."""
+        state.setdefault("stats", []).append({"synced": synced, "at": at})
+        self.save(state)
+
 
 def dataset_to_sync(
     df: DataFrame, ts_col: str, last: str | None, now: str
@@ -250,98 +268,43 @@ class HttpSyncTarget:
         """Export the pending window in ts order, committing the
         watermark after each fully-delivered page (so a crash resumes
         from the last complete page — the serial case of
-        sync_target.rb:555-598's ordered commit)."""
+        sync_target.rb:555-598's ordered commit); a failed page's own
+        error propagates."""
         st = self.state.load()
-        last = st.get("last_synced_at")
-        pending = dataset_to_sync(df, self.ts_col, last, now)
-        cols = pending.columns
-        page: list[dict] = []
-        page_max_ts: str | None = None
-        sent = 0
-
-        def flush() -> None:
-            nonlocal page, page_max_ts, sent
-            if not page:
-                return
-            self.post(page, now)
-            sent += len(page)
-            st["last_synced_at"] = page_max_ts
-            self.state.save(st)
-            page, page_max_ts = [], None
-
-        # toLocalIterator: one partition at a time on the driver — the
-        # server-side-cursor analog (sync_target.rb:504 paged_each).
-        for row in pending.toLocalIterator():
-            d = dict(zip(cols, row))
-            ts = d[self.ts_col]
-            page_max_ts = ts.isoformat() if hasattr(ts, "isoformat") else str(ts)
-            page.append(d)
-            if len(page) >= self.page_size:
-                flush()
-        flush()
-        st["last_synced_at"] = now
-        st.setdefault("stats", []).append({"synced": sent, "at": now})
-        self.state.save(st)
-        return sent
+        pending = dataset_to_sync(df, self.ts_col, st.get("last_synced_at"), now)
+        return self._deliver(self._pages(pending, self._ts_mark), now, st,
+                             "last_synced_at", now)
 
     def run_sync_changes(self, table, now: str, trim: bool = True) -> int:
         """Incremental export driven by the table's CHANGE FEED instead
-        of a timestamp rescan: read only the ``_changes/txn_N`` dirs
-        past the committed txn watermark, compact to one post-image per
-        key, deliver in (txn, key) order, and advance the watermark
-        only to FULLY-delivered transactions (a crash mid-txn re-sends
-        that txn — at-least-once, the idempotent-MERGE consumer
-        contract). At 100 TB this reads a day's txn dirs, not a
-        predicate over the whole store; ``dataset_to_sync`` remains for
-        targets without a change feed. ``trim=True`` deletes delivered
-        change dirs after the final commit."""
-        from webhookdb_spark.operators.upsert import (
-            changes_since,
-            latest_change_per_key,
-            trim_changes,
-        )
+        of a timestamp rescan: read the :func:`feed_window` past the
+        committed txn watermark (one post-image per key), deliver in
+        (txn, key) order, and advance the watermark only to
+        FULLY-delivered transactions (a crash mid-txn re-sends that
+        txn — at-least-once, the idempotent-MERGE consumer contract);
+        once every page is delivered it reaches the window's listed
+        end. At 100 TB this reads a day's txn dirs, not a predicate
+        over the whole store; ``dataset_to_sync`` remains for targets
+        without a change feed.
+
+        ``trim=True`` deletes the delivered change dirs after the final
+        commit. Those dirs are shared with every other consumer of the
+        feed (IVM, SCD2): trim only after they have run."""
+        from webhookdb_spark.operators.upsert import feed_window, trim_changes
 
         st = self.state.load()
-        last_txn = int(st.get("last_synced_txn", 0))
-        window = changes_since(table, last_txn)
-        compacted = latest_change_per_key(window, table.manifest.key).drop(
-            "_action"
-        )
-        pending = compacted.orderBy("_txn", table.manifest.key)
-        page: list[dict] = []
-        sent = 0
-        done_txn = last_txn  # highest txn with every row delivered
-        cur_txn: int | None = None
-
-        def flush() -> None:
-            nonlocal page, sent
-            if not page:
-                return
-            self.post(page, now)
-            sent += len(page)
-            # the page ended strictly inside cur_txn or at its edge:
-            # everything BEFORE cur_txn is fully delivered
-            st["last_synced_txn"] = done_txn
-            self.state.save(st)
-            page = []
-
-        for row in pending.toLocalIterator():
-            d = dict(zip(pending.columns, row))
-            t = int(d.pop("_txn"))
-            if cur_txn is not None and t != cur_txn:
-                done_txn = cur_txn  # crossed a txn boundary
-            cur_txn = t
-            page.append(d)
-            if len(page) >= self.page_size:
-                flush()
-        if cur_txn is not None:
-            done_txn = cur_txn
-        flush()
-        st["last_synced_txn"] = done_txn
-        st.setdefault("stats", []).append({"synced": sent, "at": now})
-        self.state.save(st)
+        window = feed_window(table, int(st.get("last_synced_txn", 0)))
+        if window is None:
+            self.state.record(st, 0, now)
+            return 0
+        end_txn, rows, _ = window
+        pending = rows.drop("_action").orderBy("_txn", table.manifest.key)
+        # a row of txn t delivered with every earlier row means every
+        # txn below t is delivered (rows of t itself may follow)
+        pages = self._pages(pending, lambda d: int(d.pop("_txn")) - 1)
+        sent = self._deliver(pages, now, st, "last_synced_txn", end_txn)
         if trim:
-            trim_changes(table, done_txn)
+            trim_changes(table, end_txn)
         return sent
 
     def run_sync_parallel(self, df: DataFrame, now: str, parallelism: int = 2) -> int:
@@ -351,69 +314,80 @@ class HttpSyncTarget:
         the longest fully-delivered PREFIX of pages in timestamp order —
         a failed or still-inflight early page holds the watermark back
         so a crash re-sends at-least-once instead of skipping rows.
+        Every page is attempted; if any failed, :class:`SyncPagesFailed`
+        is raised after the prefix commit.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         st = self.state.load()
         pending = dataset_to_sync(df, self.ts_col, st.get("last_synced_at"), now)
-        cols = pending.columns
+        return self._deliver(self._pages(pending, self._ts_mark), now, st,
+                             "last_synced_at", now, parallelism)
 
-        pages: list[tuple[list[dict], str]] = []
+    def _ts_mark(self, row: dict) -> str:
+        ts = row[self.ts_col]
+        return ts.isoformat() if hasattr(ts, "isoformat") else str(ts)
+
+    def _pages(self, pending: DataFrame, mark: Callable[[dict], object]
+               ) -> Iterator[tuple[list[dict], object]]:
+        """Cut ``pending`` into pages of ``page_size`` rows, each with
+        ``mark`` of its last row: the watermark that holds once that
+        page and every earlier one are delivered. ``toLocalIterator``
+        fetches one partition at a time, when the cut reaches it (the
+        server-side-cursor analog, sync_target.rb:504 paged_each)."""
+        cols = pending.columns
         page: list[dict] = []
-        page_max_ts = None
         for row in pending.toLocalIterator():
             d = dict(zip(cols, row))
-            ts = d[self.ts_col]
-            page_max_ts = ts.isoformat() if hasattr(ts, "isoformat") else str(ts)
+            held = mark(d)
             page.append(d)
-            if len(page) >= self.page_size:
-                pages.append((page, page_max_ts))
-                page, page_max_ts = [], None
+            if len(page) == self.page_size:
+                yield page, held
+                page = []
         if page:
-            pages.append((page, page_max_ts))
+            yield page, held
 
-        done: dict[int, str] = {}
-        failed: set[int] = set()
+    def _deliver(self, pages: Iterator[tuple[list[dict], object]], now: str,
+                 st: dict, wm_key: str, end: object, parallelism: int = 1) -> int:
+        """POST ``pages`` in order with at most ``parallelism`` in
+        flight; a page is only cut once a slot is free, so at most
+        ``parallelism`` pages are held in memory. After each delivered page
+        ``st[wm_key]`` commits the watermark of the longest delivered
+        prefix; once every page is delivered it commits ``end`` with
+        the cycle's stats. A serial run (``parallelism`` 1) stops at a
+        failed page and re-raises its error; a parallel run attempts
+        every page, then raises :class:`SyncPagesFailed`."""
+        inflight: deque = deque()  # (index, future, n rows, watermark)
+        failed: list[int] = []
         sent = 0
 
-        def commit_prefix() -> None:
-            # advance through consecutively-completed pages only
-            committed = st.get("last_synced_at")
-            i = 0
-            while i in done:
-                committed = done[i]
-                i += 1
-            if committed is not None:
-                st["last_synced_at"] = committed
+        def settle() -> None:
+            nonlocal sent
+            i, fut, n, held = inflight.popleft()
+            try:
+                fut.result()
+            except Exception:
+                if parallelism == 1:
+                    raise
+                failed.append(i)
+                return
+            sent += n
+            if not failed:  # pages settle in order: still a prefix
+                st[wm_key] = held
                 self.state.save(st)
 
-        def send(idx: int, rows: list[dict]) -> int:
-            self.post(rows, now)
-            return idx
-
         with ThreadPoolExecutor(max_workers=parallelism) as ex:
-            futures = {
-                ex.submit(send, i, rows): (i, max_ts)
-                for i, (rows, max_ts) in enumerate(pages)
-            }
-            for fut in list(futures):
-                i, max_ts = futures[fut]
-                try:
-                    fut.result()
-                    done[i] = max_ts
-                    sent += len(pages[i][0])
-                except Exception:
-                    failed.add(i)
-            commit_prefix()
+            for i, (rows, held) in enumerate(pages):
+                inflight.append((i, ex.submit(self.post, rows, now),
+                                 len(rows), held))
+                if len(inflight) == parallelism:
+                    settle()
+            while inflight:
+                settle()
         if failed:
-            # Surface partial failure AFTER committing the delivered
-            # prefix — run_sync propagates page errors, so this path must
-            # not silently report success either. The committed watermark
-            # makes the retry resume at the first failed page.
-            raise SyncPagesFailed(sorted(failed), sent)
-        st["last_synced_at"] = now
-        st.setdefault("stats", []).append({"synced": sent, "at": now})
-        self.state.save(st)
+            # the committed prefix makes a retry resume at the first
+            # failed page; the failure must not read as success
+            raise SyncPagesFailed(failed, sent)
+        st[wm_key] = end
+        self.state.record(st, sent, now)
         return sent
 
 
@@ -471,23 +445,24 @@ class DatabaseSyncTarget:
         if n:
             self._merge_replica(pending)
         st["last_synced_at"] = now
-        st.setdefault("stats", []).append({"synced": n, "at": now})
-        self.state.save(st)
+        self.state.record(st, n, now)
         return n
 
     def run_sync_changes(self, table, now: str, trim: bool = True) -> int:
         """Change-feed-driven staging merge: the warehouse MERGE
-        consumes :func:`changes_since`'s compacted post-images instead
+        consumes the :func:`feed_window`'s compacted post-images instead
         of a timestamp rescan — at 100 TB the source read is a day's
         txn dirs and the merge's anti-join touches only changed keys.
-        The txn watermark commits AFTER the merge lands (a crash
-        re-merges the same post-images — idempotent by key).
-        ``trim=True`` deletes delivered dirs afterwards."""
-        from webhookdb_spark.operators.upsert import (
-            changes_since,
-            latest_change_per_key,
-            trim_changes,
-        )
+        The txn watermark commits the window's listed end AFTER the
+        merge lands (a crash re-merges the same post-images —
+        idempotent by key).
+
+        ``trim=True`` deletes the delivered change dirs afterwards.
+        Those dirs are shared with every other consumer of the feed
+        (IVM, SCD2): trim only after they have run."""
+        from pyspark.sql import Observation
+
+        from webhookdb_spark.operators.upsert import feed_window, trim_changes
 
         # The feed compaction keys on the table's manifest key and the
         # replica anti-join on self.key_col — if they diverge the merge
@@ -499,40 +474,25 @@ class DatabaseSyncTarget:
                 "replica to be keyed like the source"
             )
         st = self.state.load()
-        last_txn = int(st.get("last_synced_txn", 0))
-        # The new watermark comes from the txn DIR NAMES (a driver-side
-        # listing change_txns already does — no Spark job), and the
-        # synced-row count rides the merge write as an Observation: the
-        # compaction keeps exactly one row per key, so count(*) of
-        # pending == countDistinct(key) of the window. The old shape ran
-        # a full window scan+aggregate per cycle just for these stats.
-        from webhookdb_spark.operators.upsert import change_txns
-
-        # The window ends at the listed max: a txn committed after the
-        # listing is left whole for the next cycle, never synced under a
-        # watermark that does not cover it (and so delivered twice).
-        txns = [t for t in change_txns(table) if t > last_txn]
-        max_txn = max(txns, default=last_txn)
-        window = changes_since(table, last_txn, end_txn=max_txn)
-        if not txns or window.isEmpty():
-            # no captured txns (or only empty change sets): stats-only,
-            # watermark unmoved — same as the old max(_txn) IS NULL arm
-            st.setdefault("stats", []).append({"synced": 0, "at": now})
-            self.state.save(st)
+        window = feed_window(table, int(st.get("last_synced_txn", 0)))
+        if window is None:
+            self.state.record(st, 0, now)
             return 0
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        pending = latest_change_per_key(window, table.manifest.key).drop(
-            "_action", "_txn"
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
-        self._merge_replica(pending)
-        n = int(obs.get["n"])
-        st["last_synced_txn"] = int(max_txn)
-        st.setdefault("stats", []).append({"synced": n, "at": now})
-        self.state.save(st)
+        end_txn, rows, _ = window
+        n = 0
+        # A window of empty change sets (all-stale MERGEs) has no file
+        # to read: skip the replica rewrite, still move the watermark.
+        if rows.inputFiles():
+            # the compaction keeps one row per key, so the synced-row
+            # count rides the merge write as an Observation
+            obs = Observation()
+            self._merge_replica(rows.drop("_action", "_txn").observe(
+                obs, F.count(F.lit(1)).alias("n")))
+            n = int(obs.get["n"])
+        st["last_synced_txn"] = end_txn
+        self.state.record(st, n, now)
         if trim:
-            trim_changes(table, int(max_txn))
+            trim_changes(table, end_txn)
         return n
 
     def verify(self, df: DataFrame, n_buckets: int = 32) -> DataFrame:
@@ -638,8 +598,7 @@ class SnowflakeSyncTarget:
             for s in stmts:
                 self.execute(s)
         st["last_synced_at"] = now
-        st.setdefault("stats", []).append({"synced": n, "at": now})
-        self.state.save(st)
+        self.state.record(st, n, now)
         return n
 
 
