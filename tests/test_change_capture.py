@@ -302,6 +302,25 @@ def test_feed_window_ending_in_empty_change_set(spark, tmp_warehouse,
     assert c.delivered() == ["k0", "k1", "k2", "k3"]
 
 
+def test_ivm_over_empty_change_sets_moves_only_its_watermark(
+        spark, tmp_warehouse):
+    """Past its first run, IVM over a window of empty change sets writes
+    no new generation: the watermark moves to the listed end and the
+    aggregate stays as it was."""
+    t = _table(spark, tmp_warehouse)
+    _preload(spark, t, n=4)
+    c = _FeedConsumer(spark, "ivm", tmp_warehouse)
+    c.run(t, "2024-01-06 00:00:00")
+    gens = sorted(p.name for p in c.ivm.path.glob("v_*"))
+    agg = sorted(c.ivm.aggregate().collect())
+    upsert_envelopes(t, _env(spark, [("k1", "2023-01-01T00:00:00Z")]),
+                     FAKE_V1)  # stale: an empty change set
+    assert c.run(t, "2024-01-07 00:00:00") == 1
+    assert c.watermark() == change_txns(t)[-1] == t.manifest.txn
+    assert sorted(p.name for p in c.ivm.path.glob("v_*")) == gens
+    assert sorted(c.ivm.aggregate().collect()) == agg == [("g", 4, 4)]
+
+
 def _wire_envelopes(spark, rows):
     return spark.createDataFrame(
         [(oid, json.dumps({"my_id": k, "at": "2024-06-01T00:00:00Z"}),

@@ -85,6 +85,12 @@ class IncrementalAggMaintainer(VersionedState):
         # Replace semantics: only each key's LAST post-image in the
         # window contributes; intermediate states cancel exactly.
         new_wm, compacted, n_txns = window
+        # A window of empty change sets (all-stale MERGEs) changes no
+        # contribution: past the first run, move the watermark only
+        # (a driver-side listing, as in DatabaseSyncTarget).
+        if m["current"] and not compacted.inputFiles():
+            self._advance(new_wm, m["current"])
+            return n_txns
         if self.project is not None:
             compacted = self.project(compacted)
         # The per-cycle expression trees below are pure functions of the

@@ -319,8 +319,9 @@ def merge_upsert(
         # buckets): without it a hinted no-op merge rewrites every hinted
         # bucket as "keep" rows, and on an empty table the merged plan
         # collapses to an empty LocalRelation, dropping the CollectMetrics
-        # node so Observation.get fails. isEmpty is one limit-1 job over
-        # the (already checkpointed) batch — far cheaper than the distinct
+        # node so Observation.get fails. isEmpty is a limit-1 take whose
+        # first attempt scans one wave of the (already checkpointed)
+        # batch's partitions — far cheaper than the distinct
         # shuffle+collect the hint replaced.
         affected = [] if batch.isEmpty() else list(buckets)
     else:

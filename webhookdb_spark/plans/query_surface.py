@@ -16,6 +16,7 @@ keyword screen.
 from __future__ import annotations
 
 import re
+import threading
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -53,19 +54,27 @@ _PATH_TABLE = re.compile(
 )
 
 
+# The guard flips a session-wide conf: overlapping guards would restore
+# it out of order, re-enabling SQL-on-files while another thread's user
+# SQL is still being analyzed, or leaving it disabled for good.
+_SQL_ON_FILES_LOCK = threading.Lock()
+
+
 @contextmanager
 def _no_sql_on_files(spark: SparkSession):
     """Disable ``format.`path``` table resolution while user SQL is
     ANALYZED (``spark.sql`` analyzes eagerly, so wrapping the call is
     sufficient; later execution reuses the resolved plan). This is the
     allowlist the regex screen can't be: only catalog-registered
-    tables/views resolve, no matter which datasource name is used."""
-    old = spark.conf.get("spark.sql.runSQLOnFiles", "true")
-    spark.conf.set("spark.sql.runSQLOnFiles", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.runSQLOnFiles", old)
+    tables/views resolve, no matter which datasource name is used.
+    Guards run one at a time (``_SQL_ON_FILES_LOCK``)."""
+    with _SQL_ON_FILES_LOCK:
+        old = spark.conf.get("spark.sql.runSQLOnFiles", "true")
+        spark.conf.set("spark.sql.runSQLOnFiles", "false")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.runSQLOnFiles", old)
 
 
 class QueryNotAllowed(ValueError):

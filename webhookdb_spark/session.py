@@ -3,7 +3,10 @@
 Local testing runs on ``local[N]``; the config choices here are the ones
 that matter on a real multi-executor cluster too (AQE, dynamic partition
 overwrite, Arrow, UTC session time zone so timestamp semantics match the
-reference's timestamptz-in-UTC model — SURVEY §1.2).
+reference's timestamptz-in-UTC model — SURVEY §1.2). A take (``limit(n)
+.collect()``, ``first()``, ``isEmpty()``) scans ``cpus`` partitions in
+its first attempt (``spark.sql.limit.initialNumPartitions``), so a
+capped collect that returns fewer rows than its cap finishes in one job.
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ def get_spark(
         # UTC; a UTC session TZ makes Spark TimestampType behave the same.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # A take's first attempt fills one wave of task slots.
+        .config("spark.sql.limit.initialNumPartitions", str(cpus))
         # AQE: runtime coalescing + skew-join handling — the 100TB story
         # for skewed webhook keys / skewed join sides.
         .config("spark.sql.adaptive.enabled", "true")

@@ -380,12 +380,17 @@ class VersionedState:
             reader = reader.schema(schema)
         return reader.parquet(str(self.path / current / part))
 
+    def _advance(self, txn: int, current: str) -> None:
+        """Move the watermark to ``txn`` and point meta.json at the
+        generation ``current``."""
+        write_atomic(self.path / "meta.json",
+                     json.dumps({"watermark": txn, "current": current}))
+
     def _commit(self, txn: int, replaced: str | None) -> None:
         """Point meta.json at the fully written ``v_<txn>`` and drop all
         generations but it and ``replaced`` (the previous current)."""
         new = f"v_{txn}"
-        write_atomic(self.path / "meta.json",
-                     json.dumps({"watermark": txn, "current": new}))
+        self._advance(txn, new)
         for p in self.path.iterdir():
             if p.name.startswith("v_") and p.name not in (new, replaced):
                 shutil.rmtree(p, ignore_errors=True)
